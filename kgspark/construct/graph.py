@@ -274,7 +274,14 @@ def merge_into_graph(
         save_graph(nodes, edges, out_dir, n_buckets=n_buckets)
         return {"affected_buckets": n_buckets, "n_buckets": n_buckets}
 
-    records = reduce(lambda a, b: a.unionByName(b), node_record_frames) if node_record_frames else None
+    # the batch feeds four actions below (two bucket probes, two writes):
+    # materialize it by the first one, so its source is read once
+    triples = triples.localCheckpoint(eager=False)
+    records = (
+        reduce(lambda a, b: a.unionByName(b), node_record_frames).localCheckpoint(eager=False)
+        if node_record_frames
+        else None
+    )
     stubs = stub_records_from_triples(triples)
     new_records = (
         records.withColumn("seq", F.col("seq") + F.lit(1)).unionByName(stubs)

@@ -33,9 +33,11 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from kgspark import schemas
 
 _CC_LOCAL_THRESHOLD = 2_000_000  # edges; ~32 MB of (long, long) on the driver
 
@@ -67,14 +69,14 @@ def _local_components(spark, pairs: list[tuple[int, int]]) -> DataFrame:
                 parent[rb] = ra
             else:
                 parent[ra] = rb
-    rows = [(x, find(x)) for x in parent]
+    rows = [{"id": x, "component": find(x)} for x in parent]
     schema = T.StructType(
         [
             T.StructField("id", T.LongType(), False),
             T.StructField("component", T.LongType(), False),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return schemas.local_frame(spark, rows, schema)
 
 
 def connected_components(
@@ -109,10 +111,10 @@ def connected_components(
         raise ValueError(f"method must be 'propagation' or 'star', got {method!r}")
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    # materialize the edge list once: every iteration joins against it, and
-    # without this the full upstream derivation (LSH joins, Python signature
-    # stages, ...) re-executes per iteration
-    sym = sym.localCheckpoint()
+    # materialize the edge list once (by its first action): every iteration
+    # joins against it, and without this the full upstream derivation (LSH
+    # joins, Python signature stages, ...) re-executes per iteration
+    sym = sym.localCheckpoint(eager=False)
     if local_threshold and sym.count() <= local_threshold:
         pairs = [(r["a"], r["b"]) for r in sym.collect()]
         if stats is not None:
@@ -281,14 +283,12 @@ def canonical_surface_forms(names: DataFrame, name_col: str = "name") -> DataFra
     labeled = base.select(
         "label", "name", F.xxhash64("label", "name").alias("id")
     ).join(comp, "id")
-    # canonical per component: shortest original surface form, then lexicographic
-    winners = labeled.groupBy("component").agg(
-        F.min(F.struct(F.length("name").alias("len"), F.col("name"))).alias("w")
+    # canonical per component: shortest original surface form, then
+    # lexicographic (a window, so ``base`` is derived once, not per join side)
+    winner = F.min(F.struct(F.length("name").alias("len"), F.col("name"))).over(
+        Window.partitionBy("component")
     )
-    return (
-        labeled.join(winners, "component")
-        .select("label", "name", F.col("w.name").alias("canonical"))
-    )
+    return labeled.select("label", "name", winner["name"].alias("canonical"))
 
 
 def apply_canonicalization(

@@ -74,6 +74,47 @@ def extract_triples_text(text: str | None) -> list[tuple[str, str, str, str, str
 # ~25% SLOWER at 16 cores (112k vs 141k docs/s) — pandas .str regex kernels
 # loop in Python per element, so the frame machinery is pure overhead. The
 # compiled-regex loop below is the fast shape for this extractor.
+def extract_batches(
+    batches: Iterator[pd.DataFrame], fused_html: bool = False
+) -> Iterator[tuple[pd.DataFrame, pd.DataFrame]]:
+    """The batch loop behind ``extract_doc_triples``. Per Arrow batch of
+    (url, text[, html]) pages it yields ``(triples, pages)``: the
+    DOC_TRIPLES rows of the batch, and one (url, from_html) row per page,
+    ``from_html`` telling whether its text came from the HTML extractor.
+
+    ``fused_html=True`` runs the pinned HTML->text extractor on rows whose
+    text is null, inside the same Python pass.
+    """
+    if fused_html:
+        from kgspark.extract.html import extract_text
+
+    for pdf in batches:
+        urls: list[str] = []
+        rows: list[tuple[str, str, str, str, str]] = []
+        if fused_html:
+            texts = [
+                t if t is not None else extract_text(None if h is None else bytes(h))
+                for t, h in zip(pdf["text"], pdf["html"])
+            ]
+        else:
+            texts = pdf["text"]
+        for url, text in zip(pdf["url"], texts):
+            for t in extract_triples_text(text):
+                urls.append(url)
+                rows.append(t)
+        triples = pd.DataFrame(
+            {
+                "url": urls,
+                "subj": [r[0] for r in rows],
+                "subj_type": [r[1] for r in rows],
+                "pred": [r[2] for r in rows],
+                "obj": [r[3] for r in rows],
+                "obj_type": [r[4] for r in rows],
+            }
+        )
+        yield triples, pd.DataFrame({"url": pdf["url"], "from_html": pdf["text"].isna()})
+
+
 def extract_doc_triples(pages: DataFrame, fused_html: bool = False) -> DataFrame:
     """(url, text[, html], ...) -> DOC_TRIPLES rows via mapInPandas.
 
@@ -88,37 +129,10 @@ def extract_doc_triples(pages: DataFrame, fused_html: bool = False) -> DataFrame
     (the per-url byte-identical contract is unchanged: it calls the identical
     pinned function).
     """
-    if fused_html:
-        from kgspark.extract.html import extract_text
-
-        cols = pages.select("url", "text", "html")
-    else:
-        cols = pages.select("url", "text")
+    cols = pages.select("url", "text", "html") if fused_html else pages.select("url", "text")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls: list[str] = []
-            rows: list[tuple[str, str, str, str, str]] = []
-            if fused_html:
-                texts = [
-                    t if t is not None else extract_text(None if h is None else bytes(h))
-                    for t, h in zip(pdf["text"], pdf["html"])
-                ]
-            else:
-                texts = pdf["text"]
-            for url, text in zip(pdf["url"], texts):
-                for t in extract_triples_text(text):
-                    urls.append(url)
-                    rows.append(t)
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "subj": [r[0] for r in rows],
-                    "subj_type": [r[1] for r in rows],
-                    "pred": [r[2] for r in rows],
-                    "obj": [r[3] for r in rows],
-                    "obj_type": [r[4] for r in rows],
-                }
-            )
+        for triples, _ in extract_batches(batches, fused_html):
+            yield triples
 
     return cols.mapInPandas(run, schema=schemas.DOC_TRIPLES)

@@ -7,16 +7,22 @@ stages over an (url, warc_ts, html, text, lang) corpus:
 
 Stage 1 — per-bucket, checkpoint-resumable (the expensive scan):
   bucket = pmod(xxhash64(url), n_buckets)   (Iceberg-style hidden partition)
-  HTML->text (X5, Arrow UDF) -> OpenIE triples (X1, mapInPandas)
+  HTML->text (X5) -> OpenIE triples (X1) in one mapInPandas pass, which also
+  emits one row per page; that output is materialized once and feeds
   -> triples written with dynamic partition overwrite per bucket
-  -> one lineage row per bucket (url range, doc/triple counts, run id).
-  On rerun, buckets with status='done' are anti-joined away before any
-  extraction work happens; re-processing a bucket overwrites exactly its
-  own partition (idempotent).
+  -> one lineage row per bucket (url range, doc/triple counts, url sketch,
+     run id), collected and written from the driver.
+  The pages are read once per build. On rerun, buckets with status='done'
+  are filtered away before any extraction work happens (when every bucket
+  is done the pages are not read at all); re-processing a bucket overwrites
+  exactly its own partition (idempotent).
 
 Stage 2 — global, cheap, idempotent (runs on the columnar triple store):
-  surface-form canonicalization (X7 connected components)
+  surface-form canonicalization (X7 connected components, Disease names
+  only, collected once) -> canonical triples (materialized once)
   -> nodes/edges canonicalization + dedup -> bucketed graph tables.
+  ``run_pipeline`` saves a manifest with the graph (the lineage state and
+  options it was built from) and skips this stage while it still matches.
 
 At 10^12 documents stage 1 dominates; its unit of retry/skip is the bucket,
 so a failed cluster loses at most one bucket's work. Stage 2 is a full
@@ -27,15 +33,35 @@ incremental graph maintenance.
 
 from __future__ import annotations
 
+import json
+import os
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from kgspark import schemas
 from kgspark.construct import graph as g
 from kgspark.extract import components, openie
 
 _SKETCH_K = 64  # per-bucket KMV url-sketch size (rse ~ 1/sqrt(k-2) ~ 13%)
+# the (bucket, run_seq) lineage state and graph options a saved graph was
+# built from; run_pipeline skips graph_stage while it still matches
+_MANIFEST = "graph_manifest.json"
+
+_TRIPLE_COLS = ["subj", "subj_type", "pred", "obj", "obj_type"]
+# extraction output: one row per triple (from_html null) and one row per
+# page (triple columns null, from_html set), so one pass over the pages
+# feeds both the triple store and the lineage
+_EXTRACTED = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        *[T.StructField(c, T.StringType(), True) for c in _TRIPLE_COLS],
+        T.StructField("from_html", T.BooleanType(), True),
+    ]
+)
 
 
 @dataclass
@@ -46,14 +72,44 @@ class PipelineResult:
     n_buckets_skipped: int
 
 
-def _lineage_done_buckets(spark: SparkSession, lineage_path: str) -> DataFrame | None:
-    try:
-        lin = spark.read.parquet(lineage_path)
-    except Exception:
-        return None
-    # latest row per bucket wins (a bucket reprocessed after a failed run)
-    latest = lin.groupBy("bucket").agg(F.max_by("status", "run_seq").alias("status"))
-    return latest.filter(F.col("status") == "done").select("bucket")
+@dataclass
+class ExtractResult:
+    """What ``extract_stage`` did. Unpacks as ``(processed, skipped)``;
+    ``latest`` is the lineage after the stage: per bucket, the fields of its
+    latest row (by ``run_seq``) and ``rows``, its number of lineage rows."""
+
+    processed: int
+    skipped: int
+    latest: dict[int, dict]
+
+    def __iter__(self):
+        return iter((self.processed, self.skipped))
+
+
+def _bucket_of(n_buckets: int):
+    return F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
+
+
+def _read_lineage(spark: SparkSession, lineage_path: str) -> dict[int, dict]:
+    """Latest lineage row per bucket (a bucket reprocessed after a failed run
+    has several). No lineage directory means a fresh output directory; an
+    unreadable one raises."""
+    if not os.path.exists(lineage_path):
+        return {}
+    lin = spark.read.schema(schemas.LINEAGE).parquet(lineage_path)
+    latest = lin.groupBy("bucket").agg(
+        F.max_by(F.struct("run_seq", "status", "n_docs", "n_triples"), "run_seq").alias("s"),
+        F.count("*").alias("rows"),
+    )
+    return {r["bucket"]: {**r["s"].asDict(), "rows": r["rows"]} for r in latest.collect()}
+
+
+def _extract_pages(batches):
+    for triples, pages in openie.extract_batches(batches, fused_html=True):
+        yield pd.concat(
+            [triples.assign(from_html=None), pages.assign(**dict.fromkeys(_TRIPLE_COLS))],
+            ignore_index=True,
+        )
 
 
 def extract_stage(
@@ -64,80 +120,80 @@ def extract_stage(
     run_id: str = "run-0",
     run_seq: int = 0,
     resume: bool = True,
-) -> tuple[int, int]:
-    """Stage 1. Returns (buckets_processed, buckets_skipped)."""
+) -> ExtractResult:
+    """Stage 1. Unpacks as (buckets_processed, buckets_skipped)."""
     triples_path = f"{out_dir}/doc_triples"
     lineage_path = f"{out_dir}/lineage"
 
-    pages = pages.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
+    latest = _read_lineage(spark, lineage_path)
+    done = sorted(b for b, r in latest.items() if r["status"] == "done") if resume else []
+    if set(range(n_buckets)) <= set(done):  # nothing left to extract
+        return ExtractResult(0, len(done), latest)
 
-    skipped = 0
-    if resume:
-        done = _lineage_done_buckets(spark, lineage_path)
-        if done is not None:
-            done_ids = [r["bucket"] for r in done.collect()]  # <= n_buckets ints
-            skipped = len(done_ids)
-            if done_ids:
-                pages = pages.filter(~F.col("bucket").isin(done_ids))
+    pages = pages.withColumn("bucket", _bucket_of(n_buckets))
+    if done:
+        pages = pages.filter(~F.col("bucket").isin(done))
 
-    # fused single Python stage: HTML->text + OpenIE in one Arrow round-trip
-    doc_triples = openie.extract_doc_triples(pages, fused_html=True)
-    # mapInPandas consumes declared columns only; re-derive bucket from url so
-    # the triple store partitions identically to the input split.
-    doc_triples = doc_triples.withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
+    # fused single Python stage (HTML->text + OpenIE in one Arrow round-trip)
+    # that also emits one row per page; materialized once, it feeds the
+    # triple store and every lineage column, so the pages are read once.
+    cols = pages.select("url", "text", "html")
+    extracted = (
+        cols.mapInPandas(_extract_pages, schema=_EXTRACTED)
+        .withColumn("bucket", _bucket_of(n_buckets))
+        .cache()
     )
+    try:
+        is_page = F.col("from_html").isNotNull()
+        triples = extracted.where(~is_page).select("url", *_TRIPLE_COLS, "bucket")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        triples.write.mode("overwrite").partitionBy("bucket").parquet(triples_path)
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    doc_triples.write.mode("overwrite").partitionBy("bucket").parquet(triples_path)
+        # per-bucket KMV url sketch (<= _SKETCH_K hashes): lineage rows double
+        # as mergeable cardinality summaries — corpus-level distinct-url
+        # questions are answered from lineage alone, no rescan
+        # (corpus_url_cardinality). kmv_sketch's sort-based plan bounds
+        # per-group state at k rows.
+        from kgspark.ops.sketch import kmv_sketch
 
-    # lineage from what was actually written (columnar re-read, cheap) plus
-    # per-bucket doc counts from the input split (url column only — the scan
-    # prunes html/text, so no extraction re-runs here).
-    written = spark.read.parquet(triples_path)
-    processed = pages.select(
-        "url", "bucket", F.col("text").isNull().cast("long").alias("from_html")
-    )
-    doc_stats = processed.groupBy("bucket").agg(
-        F.count("*").alias("n_docs"),
-        F.min("url").alias("url_min"),
-        F.max("url").alias("url_max"),
-        F.sum("from_html").alias("n_html_extracted"),
-    )
-    # per-bucket KMV url sketch (<= _SKETCH_K hashes): lineage rows double as
-    # mergeable cardinality summaries — corpus-level distinct-url questions
-    # are answered from lineage alone, no rescan (corpus_url_cardinality).
-    # kmv_sketch's sort-based plan bounds per-group state at k rows.
-    from kgspark.ops.sketch import kmv_sketch
-
-    url_sketches = kmv_sketch(processed, "url", ["bucket"], k=_SKETCH_K).withColumnRenamed(
-        "sketch", "url_sketch"
-    )
-    doc_stats = doc_stats.join(url_sketches, "bucket", "left")
-    triple_stats = written.groupBy("bucket").agg(
-        F.count("*").alias("n_triples"),
-        F.countDistinct("pred").alias("n_preds"),
-        F.countDistinct("subj").alias("n_subjects"),
-    )
-    lineage = (
-        doc_stats.join(triple_stats, "bucket", "left")
-        .select(
-            "bucket",
-            F.lit(run_id).alias("run_id"),
-            F.lit(run_seq).cast("long").alias("run_seq"),
-            "url_min",
-            "url_max",
-            "n_docs",
-            F.coalesce("n_html_extracted", F.lit(0)).alias("n_html_extracted"),
-            F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
-            F.coalesce("n_preds", F.lit(0)).alias("n_preds"),
-            F.coalesce("n_subjects", F.lit(0)).alias("n_subjects"),
-            "url_sketch",
-            F.lit("done").alias("status"),
+        url_sketches = kmv_sketch(
+            extracted.where(is_page), "url", ["bucket"], k=_SKETCH_K
+        ).withColumnRenamed("sketch", "url_sketch")
+        # page rows carry from_html, triple rows subj/pred: each aggregate
+        # below sees only its own kind of row
+        page_url = F.when(is_page, F.col("url"))
+        stats = (
+            extracted.groupBy("bucket")
+            .agg(
+                F.count(page_url).alias("n_docs"),
+                F.min(page_url).alias("url_min"),
+                F.max(page_url).alias("url_max"),
+                F.sum(F.col("from_html").cast("long")).alias("n_html_extracted"),
+                F.count("subj").alias("n_triples"),
+                F.countDistinct("pred").alias("n_preds"),
+                F.countDistinct("subj").alias("n_subjects"),
+            )
+            .join(url_sketches, "bucket", "left")
+            .collect()  # one row per processed bucket: <= n_buckets rows
         )
-    )
-    lineage.write.mode("append").parquet(lineage_path)
-    return (lineage.count(), skipped)
+    finally:
+        extracted.unpersist()
+
+    rows = [
+        {**r.asDict(), "run_id": run_id, "run_seq": run_seq, "status": "done"}
+        for r in stats
+    ]
+    if rows:
+        schemas.local_frame(spark, rows, schemas.LINEAGE).write.mode("append").parquet(
+            lineage_path
+        )
+    for r in rows:
+        prev = latest.get(r["bucket"])
+        n_rows = prev["rows"] + 1 if prev else 1
+        if prev is None or r["run_seq"] >= prev["run_seq"]:
+            prev = {k: r[k] for k in ("run_seq", "status", "n_docs", "n_triples")}
+        latest[r["bucket"]] = {**prev, "rows": n_rows}
+    return ExtractResult(len(rows), len(done), latest)
 
 
 def graph_stage(
@@ -155,9 +211,15 @@ def graph_stage(
     facts survive). Applied BEFORE canonicalization so spurious surface
     forms don't seed alias components either.
     """
-    triples = spark.read.parquet(f"{out_dir}/doc_triples").drop("bucket")
+    # the graph is about to change: only run_pipeline re-records what it
+    # was built from, once the new graph is written
+    if os.path.exists(f"{out_dir}/{_MANIFEST}"):
+        os.remove(f"{out_dir}/{_MANIFEST}")
+    triples = (
+        spark.read.schema(schemas.DOC_TRIPLES).parquet(f"{out_dir}/doc_triples").drop("bucket")
+    )
     if min_support and min_support > 1:
-        key = ["subj", "subj_type", "pred", "obj", "obj_type"]
+        key = _TRIPLE_COLS
         # distinct docs, not assertion rows: one document repeating a triple
         # must not satisfy the gate (it exists to kill single-document errors)
         support = (
@@ -173,18 +235,36 @@ def graph_stage(
             .filter(F.col("label") == "Disease")
             .distinct()
         )
+        # Disease names only (dictionary-scale): computed once, then both
+        # joins read it from the driver
         mapping = components.canonical_surface_forms(names).filter(
             F.col("name") != F.col("canonical")
         )
+        mapping = schemas.local_frame(
+            spark, [r.asDict() for r in mapping.collect()], mapping.schema
+        )
         triples = components.apply_canonicalization(triples, mapping, types=("Disease",))
 
-    tr = triples.select("subj", "subj_type", "pred", "obj", "obj_type")
-    nodes, edges = g.build_graph(
-        [spark.createDataFrame([], schema="label string, name string, props map<string,string>, seq long")],
-        tr,
-    )
+    # canonical triples, computed once for both the nodes and the edges write
+    tr = triples.select(*_TRIPLE_COLS).localCheckpoint()
+    nodes, edges = g.build_graph([schemas.local_frame(spark, [], schemas.NODE_RECORDS)], tr)
     g.save_graph(nodes, edges, out_dir, n_buckets=n_buckets)
     return nodes, edges
+
+
+def _read_manifest(out_dir: str) -> dict | None:
+    path = f"{out_dir}/{_MANIFEST}"
+    if not os.path.exists(path):
+        return None
+    with open(path, encoding="utf-8") as f:
+        return json.load(f)
+
+
+def _write_manifest(out_dir: str, manifest: dict) -> None:
+    tmp = f"{out_dir}/{_MANIFEST}.tmp"
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, f"{out_dir}/{_MANIFEST}")
 
 
 def run_pipeline(
@@ -198,22 +278,23 @@ def run_pipeline(
     canonicalize: bool = True,
     min_support: int | None = None,
 ) -> PipelineResult:
-    processed, skipped = extract_stage(
-        spark, pages, out_dir, n_buckets, run_id, run_seq, resume
-    )
-    nodes, edges = graph_stage(spark, out_dir, n_buckets, canonicalize, min_support)
-    lin = spark.read.parquet(f"{out_dir}/lineage")
-    latest = lin.groupBy("bucket").agg(
-        F.max_by(F.struct("n_docs", "n_triples"), "run_seq").alias("s")
-    )
-    totals = latest.agg(
-        F.sum("s.n_docs").alias("docs"), F.sum("s.n_triples").alias("triples")
-    ).collect()[0]
+    ex = extract_stage(spark, pages, out_dir, n_buckets, run_id, run_seq, resume)
+    # the graph is current when nothing was extracted and the manifest saved
+    # with it names this lineage state and these options
+    manifest = {
+        "lineage": sorted([b, r["run_seq"], r["rows"]] for b, r in ex.latest.items()),
+        "n_buckets": n_buckets,
+        "canonicalize": canonicalize,
+        "min_support": min_support,
+    }
+    if ex.processed or _read_manifest(out_dir) != manifest:
+        graph_stage(spark, out_dir, n_buckets, canonicalize, min_support)
+        _write_manifest(out_dir, manifest)
     return PipelineResult(
-        n_docs=totals["docs"] or 0,
-        n_triples=totals["triples"] or 0,
-        n_buckets_processed=processed,
-        n_buckets_skipped=skipped,
+        n_docs=sum(r["n_docs"] for r in ex.latest.values()),
+        n_triples=sum(r["n_triples"] for r in ex.latest.values()),
+        n_buckets_processed=ex.processed,
+        n_buckets_skipped=ex.skipped,
     )
 
 

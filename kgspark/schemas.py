@@ -9,7 +9,25 @@ All node properties are strings, mirroring the reference's string-typed model
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+
+def local_frame(spark: SparkSession, rows: list[dict], schema: T.StructType) -> DataFrame:
+    """Driver-side rows -> a frame that plans as a JVM ``LocalTableScan``.
+
+    The rows become one ``pyarrow.Table`` typed by ``schema`` (a value of the
+    wrong type raises ``TypeError`` here), which the JVM keeps as a local
+    relation. A list passed straight to ``createDataFrame`` becomes a
+    pickled RDD (``Scan ExistingRDD``), unpickled again by every plan that
+    references it.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)
+
 
 # ---------------------------------------------------------------------------
 # Primary input: Common-Crawl-style web pages (BASELINE.json input_hint)
@@ -134,6 +152,7 @@ LINEAGE = T.StructType(
         T.StructField("n_triples", T.LongType(), False),
         T.StructField("n_preds", T.LongType(), False),
         T.StructField("n_subjects", T.LongType(), False),
+        T.StructField("url_sketch", T.ArrayType(T.StringType(), False), True),
         T.StructField("status", T.StringType(), False),
     ]
 )

@@ -11,9 +11,10 @@ Two read paths:
   parallel scan does not preserve. These catalogs are dimension-scale
   (10^2..10^4 rows — they are broadcast sides at 100 TB, not the corpus), so
   ordering is materialized driver-side with an explicit ``seq`` column and
-  shipped to executors via ``createDataFrame`` (Arrow). The 10^12-row web
-  corpus never takes this path: its ordering key is data-derived
-  (url, warc_ts) — see kgspark/pipeline.py.
+  shipped as one Arrow table (``schemas.local_frame``): the frame plans as
+  a JVM ``LocalTableScan``, so the build runs no Python worker. The
+  10^12-row web corpus never takes this path: its ordering key is
+  data-derived (url, warc_ts) — see kgspark/pipeline.py.
 
 ``seq`` is globally monotone across sources in the reference's fixed load
 order Diseases -> Drugs -> NursingHomes -> Insurances (neo4j_loader.py:74-77).
@@ -47,7 +48,7 @@ def _missing(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame 
     if Path(path).exists():
         return None
     warnings.warn(f"source file not found, skipping: {path}", stacklevel=3)
-    return spark.createDataFrame([], schema=schema)
+    return schemas.local_frame(spark, [], schema)
 
 
 # ---------------------------------------------------------------------------
@@ -99,7 +100,7 @@ def load_diseases(spark: SparkSession, path: str) -> DataFrame:
                 "seq": _seq("diseases", i),
             }
         )
-    return spark.createDataFrame(rows, schema=_DISEASE_ROW_SCHEMA)
+    return schemas.local_frame(spark, rows, _DISEASE_ROW_SCHEMA)
 
 
 def read_diseases_spark(spark: SparkSession, path: str) -> DataFrame:
@@ -147,7 +148,7 @@ def load_drugs(spark: SparkSession, path: str) -> DataFrame:
                 }
             )
             i += 1
-    return spark.createDataFrame(rows, schema=_DRUG_ROW_SCHEMA)
+    return schemas.local_frame(spark, rows, _DRUG_ROW_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -190,7 +191,7 @@ def load_nursing_homes(spark: SparkSession, path: str) -> DataFrame:
                     "seq": _seq("nursing_homes", i),
                 }
             )
-    return spark.createDataFrame(rows, schema=_NURSING_ROW_SCHEMA)
+    return schemas.local_frame(spark, rows, _NURSING_ROW_SCHEMA)
 
 
 def read_nursing_homes_spark(spark: SparkSession, path: str) -> DataFrame:
@@ -244,7 +245,7 @@ def load_insurances(spark: SparkSession, path: str) -> DataFrame:
                 "seq": _seq("insurances", i),
             }
         )
-    return spark.createDataFrame(rows, schema=_INSURANCE_ROW_SCHEMA)
+    return schemas.local_frame(spark, rows, _INSURANCE_ROW_SCHEMA)
 
 
 def read_insurances_spark(spark: SparkSession, path: str) -> DataFrame:

@@ -48,7 +48,7 @@ def test_no_collect_outside_dimension_scale_allowlist():
         "ops/kmeans.py": "k centroids per Lloyd round: k x dim floats",
         "ops/pq.py": "codebooks + query distance tables: constant-size",
         "ops/similarity.py": "IVF centroids: dimension-scale",
-        "pipeline.py": "lineage/metrics rows: one per partition-batch",
+        "pipeline.py": "lineage rows (<= n_buckets) + Disease alias mapping: dictionary-scale",
         "query/cards.py": "top-k card rendering: query-result scale",
         "query/rag.py": "retrieval results: query-result scale",
         "query/subgraph.py": "BFS frontier convergence: 1-row counts",
@@ -66,3 +66,21 @@ def test_no_collect_outside_dimension_scale_allowlist():
     )
     stale = [m for m in allowed if not (PKG / m).exists()]
     assert not stale, f"allowlist entries for missing modules: {stale}"
+
+
+def test_loader_plans_are_local_table_scans(spark, mini_sources):
+    """The ordered catalog loaders ship their rows as one Arrow table: the
+    executed plan is a JVM ``LocalTableScan``. A list passed to
+    ``createDataFrame`` is a hidden ``parallelize`` (``Scan ExistingRDD``)."""
+    from kgspark.sources import structured as src
+
+    frames = {
+        "load_diseases": src.load_diseases(spark, mini_sources.diseases),
+        "load_drugs": src.load_drugs(spark, mini_sources.drugs),
+        "load_nursing_homes": src.load_nursing_homes(spark, mini_sources.nursing_homes),
+        "load_insurances": src.load_insurances(spark, mini_sources.insurances),
+    }
+    for name, df in frames.items():
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (name, plan)

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kgspark import fixtures, pipeline
@@ -349,3 +350,144 @@ def test_min_support_counts_distinct_docs_not_rows(spark, tmp_path):
     got = {(r["src_id"], r["dst_id"]) for r in kept.collect()}
     assert (ids["C"], ids["D"]) in got
     assert (ids["A"], ids["B"]) not in got
+
+
+def _lineage_oracle(spark, pages, out, n_buckets):
+    """The lineage columns as the earlier two-pass derivation computed them:
+    doc stats and url sketches from the input pages, triple stats from the
+    written triple store."""
+    from kgspark.ops.sketch import kmv_sketch
+    from kgspark.pipeline import _SKETCH_K
+
+    bucket = F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
+    processed = pages.select(
+        "url", bucket.alias("bucket"), F.col("text").isNull().cast("long").alias("from_html")
+    )
+    doc_stats = processed.groupBy("bucket").agg(
+        F.count("*").alias("n_docs"),
+        F.min("url").alias("url_min"),
+        F.max("url").alias("url_max"),
+        F.sum("from_html").alias("n_html_extracted"),
+    )
+    sketches = kmv_sketch(processed, "url", ["bucket"], k=_SKETCH_K)
+    triple_stats = spark.read.parquet(f"{out}/doc_triples").groupBy("bucket").agg(
+        F.count("*").alias("n_triples"),
+        F.countDistinct("pred").alias("n_preds"),
+        F.countDistinct("subj").alias("n_subjects"),
+    )
+    rows = doc_stats.join(sketches, "bucket", "left").join(triple_stats, "bucket", "left")
+    return {
+        r["bucket"]: (r["url_min"], r["url_max"], r["n_docs"], r["n_html_extracted"] or 0,
+                      r["n_triples"] or 0, r["n_preds"] or 0, r["n_subjects"] or 0,
+                      list(r["sketch"]))
+        for r in rows.collect()
+    }
+
+
+def _lineage(spark, out):
+    return {
+        r["bucket"]: (r["url_min"], r["url_max"], r["n_docs"], r["n_html_extracted"],
+                      r["n_triples"], r["n_preds"], r["n_subjects"], list(r["url_sketch"]))
+        for r in spark.read.parquet(f"{out}/lineage").collect()
+    }
+
+
+def test_pipeline_reads_each_warc_partition_once(spark, tmp_path):
+    """One pass over the input: every partition of the WARC scan is read
+    exactly once by a build, and the lineage it writes equals the two-pass
+    derivation's, url sketches included."""
+    from datetime import datetime, timedelta, timezone
+
+    from kgspark.sources.warc import read_warc, write_synthetic_warc
+
+    pdf = fixtures.web_pages_pdf(160, both_cols=True)
+    epoch = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    docs = [(r.url, epoch + timedelta(seconds=i), bytes(r.html)) for i, r in enumerate(pdf.itertuples())]
+    warc_dir = tmp_path / "warc"
+    warc_dir.mkdir()
+    for k in range(4):
+        write_synthetic_warc(str(warc_dir / f"part{k}.warc.gz"), docs[k::4])
+
+    log = tmp_path / "reads.log"
+
+    def logged(batches):
+        from pyspark import TaskContext
+
+        with open(log, "a", encoding="utf-8") as f:
+            f.write(f"{TaskContext.get().partitionId()}\n")
+        yield from batches
+
+    warc = read_warc(spark, str(warc_dir))
+    pages = warc.mapInPandas(logged, schema=warc.schema)
+    n_parts = pages.rdd.getNumPartitions()
+    out = str(tmp_path / "kg")
+    res = pipeline.run_pipeline(spark, pages, out, n_buckets=8)
+
+    reads = sorted(int(x) for x in log.read_text("utf-8").split())
+    assert reads == list(range(n_parts))
+    assert res.n_docs == 160
+    assert _lineage(spark, out) == _lineage_oracle(spark, read_warc(spark, str(warc_dir)), out, 8)
+
+
+def test_lineage_matches_two_pass_derivation_on_mixed_pages(spark, tmp_path):
+    """Pages with pre-extracted text and pages with only html: the one-pass
+    lineage counts html extractions and everything else as before."""
+    pages = fixtures.web_pages_spark_small(spark, 120)
+    out = str(tmp_path / "kg")
+    pipeline.run_pipeline(spark, pages, out, n_buckets=4)
+    got = _lineage(spark, out)
+    assert got == _lineage_oracle(spark, pages, out, 4)
+    assert 0 < sum(v[3] for v in got.values()) < 120
+
+
+def test_unreadable_lineage_fails_the_run(spark, tmp_path):
+    """A lineage table that exists but cannot be read is an error, not
+    "no lineage" (which would silently rebuild every bucket)."""
+    out = tmp_path / "kg"
+    (out / "lineage").mkdir(parents=True)
+    (out / "lineage" / "part-00000.parquet").write_bytes(b"not a parquet file")
+    pages = fixtures.web_pages_spark_small(spark, 20)
+    with pytest.raises(Exception, match="lineage"):  # the error names the bad file
+        pipeline.run_pipeline(spark, pages, str(out), n_buckets=4)
+    assert not (out / "doc_triples").exists()
+
+
+def test_resume_skips_graph_stage_while_manifest_matches(spark, tmp_path, monkeypatch):
+    """A rerun over finished lineage leaves the saved graph alone; new
+    extraction, other graph options or a graph rewritten outside
+    run_pipeline rebuild it."""
+    import os
+
+    pages = fixtures.web_pages_spark_small(spark, 120)
+    out = str(tmp_path / "kg")
+    first = pipeline.run_pipeline(spark, pages, out, n_buckets=4)
+
+    def graph_files():
+        return {
+            os.path.join(root, n): os.path.getmtime(os.path.join(root, n))
+            for t in ("nodes", "edges")
+            for root, _, names in os.walk(f"{out}/{t}")
+            for n in names
+        }
+
+    before = graph_files()
+    real_graph_stage = pipeline.graph_stage
+    calls = []
+
+    def counting_graph_stage(*args, **kwargs):
+        calls.append(args)
+        return real_graph_stage(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "graph_stage", counting_graph_stage)
+    again = pipeline.run_pipeline(spark, pages, out, n_buckets=4, run_id="r2", run_seq=1)
+    assert calls == [] and graph_files() == before
+    assert (again.n_buckets_processed, again.n_buckets_skipped) == (0, 4)
+    assert (again.n_docs, again.n_triples) == (first.n_docs, first.n_triples)
+
+    pipeline.run_pipeline(spark, pages, out, n_buckets=4, canonicalize=False)
+    assert len(calls) == 1
+    pipeline.run_pipeline(spark, pages, out, n_buckets=4, canonicalize=False)
+    assert len(calls) == 1
+    real_graph_stage(spark, out, n_buckets=4)  # the graph changed outside run_pipeline
+    pipeline.run_pipeline(spark, pages, out, n_buckets=4, canonicalize=False)
+    assert len(calls) == 2
