@@ -4839,7 +4839,7 @@ votes AS (
 ),
 ranked AS (
   SELECT *,
-         SUM(votes) OVER (PARTITION BY entity_id) AS total_votes,
+         CAST(SUM(votes) OVER (PARTITION BY entity_id) AS BIGINT) AS total_votes,
          COUNT(*) OVER (PARTITION BY entity_id) AS n_values,
          ROW_NUMBER() OVER (PARTITION BY entity_id
                             ORDER BY votes DESC, type ASC) AS rk
@@ -4900,7 +4900,7 @@ tc AS (
   FROM terms WHERE term <> '' GROUP BY doc_id, term
 ),
 per_doc AS (
-  SELECT doc_id, sum(c) AS n_tokens,
+  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
          sum(c * CAST(round(ln(c) * 1000, 0) AS BIGINT)) AS s
   FROM tc GROUP BY doc_id
 )
@@ -5975,7 +5975,7 @@ WITH votes AS (
 ),
 ranked AS (
   SELECT *,
-         SUM(votes) OVER (PARTITION BY entity_id, attr) AS total_votes,
+         CAST(SUM(votes) OVER (PARTITION BY entity_id, attr) AS BIGINT) AS total_votes,
          COUNT(*) OVER (PARTITION BY entity_id, attr) AS n_values,
          ROW_NUMBER() OVER (PARTITION BY entity_id, attr
                             ORDER BY votes DESC, value ASC) AS rk

@@ -2,7 +2,7 @@
 
 Re-expresses the construction + query semantics of the reference system
 ``Nelly-se/Knowledge-Graph-Construction`` (an insurance/medical/elder-care KGQA
-stack; see /root/repo/SURVEY.md) as idiomatic Spark DataFrame plans:
+stack; see SURVEY.md) as idiomatic Spark DataFrame plans:
 
 - structured sources (JSON / nested-JSON / CSV) -> projection/explode plans ->
   ``triples`` -> MERGE-semantics canonicalization -> ``nodes`` + ``edges``

@@ -38,22 +38,6 @@ LABELS = [
     "Exclusion",
 ]
 
-# Relation vocabulary: structured loaders + text-IE prompt schema
-RELATIONS = [
-    "HAS_SYMPTOM",
-    "BELONGS_TO_DEPT",
-    "TREATED_BY",
-    "HAS_COMPLICATION",
-    "TARGETS_POPULATION",
-    "COVERS_DISEASE",
-    # text-IE relations (text_graph_builder.py:39-43)
-    "COVERS",
-    "EXCLUDES",
-    "ALLOWS_AGE",
-    "REFUSES_DISEASE",
-]
-
-
 @dataclass(frozen=True)
 class ExplodeRule:
     head_type: str

@@ -33,16 +33,6 @@ def detect_hot_keys(df: DataFrame, key_cols: list[str], min_count: int) -> DataF
     )
 
 
-def with_salt(df: DataFrame, n_salts: int, salt_col: str = "_salt") -> DataFrame:
-    """Deterministic salt: spreads rows of one key over n_salts reducers.
-
-    Derived from a hash of the whole row tuple (not rand()) so reruns are
-    partitioning-invariant and resumable."""
-    return df.withColumn(
-        salt_col, F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
-    )
-
-
 def salted_collect_set(
     df: DataFrame, key_cols: list[str], value_col: str, n_salts: int = 32
 ) -> DataFrame:

@@ -236,7 +236,7 @@ def transe_train(
         # aggregate SEPARATELY — a cross-kind union would coerce the id
         # column (entity ids are often bigint hashes, relation ids strings;
         # the coercion crashes under ANSI casts — found driving
-        # scripts/train_embeddings.py over a save_graph output)
+        # a TransE training loop over a save_graph output)
         gdiff = F.zip_with("gp", "gn", lambda a, b: a - b)
         contrib_e = (
             active.select(F.col("s").alias("id"), gdiff.alias("g"))

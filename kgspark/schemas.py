@@ -66,26 +66,6 @@ DISEASES = T.StructType(
     ]
 )
 
-# one flattened medicine record (after the nested sheet->medicines explode;
-# reference nested shape handled in sources/structured.py; neo4j_loader.py:156-181)
-MEDICINE = T.StructType(
-    [
-        T.StructField("sheet", T.StringType(), True),
-        T.StructField("id", T.StringType(), True),
-        T.StructField("name", T.StringType(), True),
-        T.StructField("category_code", T.StringType(), True),
-        T.StructField("category_name", T.StringType(), True),
-        T.StructField("subcategory_code", T.StringType(), True),
-        T.StructField("subcategory_name", T.StringType(), True),
-        T.StructField("reimbursement_category", T.StringType(), True),
-        T.StructField("dosage", T.StringType(), True),
-        T.StructField("all_category_codes", T.ArrayType(T.StringType()), True),
-    ]
-)
-
-# nursing_homes.csv — Chinese headers, UTF-8 BOM; neo4j_loader.py:188-215
-NURSING_HOMES_RAW_COLUMNS = ["城市", "名称", "性质", "床位", "价格(元/月)", "特色服务", "地址"]
-
 # insurance_info.json — Chinese keys; neo4j_loader.py:222-269
 INSURANCE_RAW = T.StructType(
     [
@@ -110,33 +90,6 @@ NODE_RECORDS = T.StructType(
         T.StructField("name", T.StringType(), False),
         T.StructField("props", T.MapType(T.StringType(), T.StringType()), True),
         T.StructField("seq", T.LongType(), False),
-    ]
-)
-
-TRIPLES = T.StructType(
-    [
-        T.StructField("subj", T.StringType(), False),
-        T.StructField("subj_type", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj", T.StringType(), False),
-        T.StructField("obj_type", T.StringType(), False),
-    ]
-)
-
-NODES = T.StructType(
-    [
-        T.StructField("entity_id", T.LongType(), False),
-        T.StructField("label", T.StringType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("props", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
-
-EDGES = T.StructType(
-    [
-        T.StructField("src_id", T.LongType(), False),
-        T.StructField("rel", T.StringType(), False),
-        T.StructField("dst_id", T.LongType(), False),
     ]
 )
 

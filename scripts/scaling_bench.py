@@ -38,7 +38,7 @@ from kgspark.construct.graph import edges_from_triples
 
 def jiffies():
     # (steal, total) from /proc/stat: hypervisor co-tenant time our own
-    # threads cannot inflate (see bench.py cpu_steal_pct).
+    # threads cannot inflate.
     try:
         v = [int(x) for x in open("/proc/stat").readline().split()[1:]]
         return (v[7] if len(v) > 7 else 0), sum(v)

@@ -29,7 +29,10 @@ def ddb():
 
 
 def _normalize(df):
-    """pandas frame -> sorted-rows list of tuples with stable value repr."""
+    """pandas frame -> sorted-rows list of tuples with stable value repr.
+    Floats carry a type tag so that, like the CORRECTNESS value hash, the
+    comparison never equates an integer column with a float one (``12`` vs
+    ``12.0``)."""
     df = df[sorted(df.columns)]
 
     def norm(v):
@@ -38,7 +41,7 @@ def _normalize(df):
         if isinstance(v, float):
             if math.isnan(v):
                 return "nan"
-            return f"{v:.9g}"
+            return f"float:{v:.9g}"
         return str(v)
 
     rows = [tuple(norm(v) for v in row) for row in df.itertuples(index=False, name=None)]

@@ -490,9 +490,11 @@ def test_minhash_signatures_cross_run_deterministic(spark, near_dup_docs):
     """Signatures must be reproducible across processes: compare against the
     same computation in a PYTHONHASHSEED-independent subprocess."""
     import subprocess, sys, json
+    from pathlib import Path
     sigs = {r["doc_id"]: list(r["sig"]) for r in dedup.minhash_signatures(near_dup_docs).collect()}
+    root = str(Path(__file__).resolve().parent.parent)  # the checkout under test
     code = (
-        "import sys, json; sys.path.insert(0, '/root/repo')\n"
+        f"import sys, json; sys.path.insert(0, {root!r})\n"
         "from kgspark.ops.dedup import _minhash_signature, _shingle_hashes\n"
         "base = 'the quick brown fox jumps over the lazy dog ' * 8\n"
         "sig = _minhash_signature(_shingle_hashes(base, 5), 64).astype('int64')\n"
