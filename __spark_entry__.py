@@ -1303,10 +1303,11 @@ FROM (SELECT doc_id, string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), 
 
 
 def _context_cards(spark, sf):
-    """F5 context-card formatting (kgspark/query/cards.py) exercised over the
-    TPC-H dims: per-region card with a first-5 sorted nation list and a
-    50-char comment truncation + unconditional '...' — the reference's
-    graph_retriever.py:64-75,171-177 template semantics, hash-verified."""
+    """F5 context-card template semantics as JVM string expressions over the
+    TPC-H dims (it does not call kgspark/query/cards.py): per-nation card
+    with a first-5 sorted customer list and a 50-char roster truncation +
+    unconditional '...' — the reference's graph_retriever.py:64-75,171-177
+    template shapes, hash-verified."""
     nation = _t(spark, sf, "nation")
     customer = _t(spark, sf, "customer")
     agg = (

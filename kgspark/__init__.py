@@ -9,7 +9,8 @@ stack; see SURVEY.md) as idiomatic Spark DataFrame plans:
 - web-pages corpus (url, warc_ts, html, text, lang) -> vectorized HTML->text ->
   sentence-split OpenIE triple extraction (mapInPandas) -> mention detection ->
   connected-components canonicalization -> bucketed graph tables + lineage
-- query layer: the reference's GraphRAG retrieval templates as DataFrame plans.
+- query layer: the reference's GraphRAG retrieval templates, one Spark plan
+  each, and its context cards as Python f-strings over the collected rows.
 
 No RDDs, no per-row Python UDFs; pandas/Arrow UDFs only where built-in
 functions cannot express the semantics.

@@ -2,10 +2,11 @@
 analogue of the reference's ``POST /chat`` → ``GraphRetriever.retrieve``
 (rag_engine.py:56-161 → graph_retriever.py:23-246).
 
-``retrieve_context`` runs the whole loop: rule-based intent parse (X3
-stand-in) → the intent-gated retrieval plans (J2/J3 expands, P8 filters,
-W1/W2 limits) → context cards (F5) → one assembled context string. The
-branch structure mirrors the reference's retrieve() exactly:
+``ContextRetriever.ask`` runs the whole loop: rule-based intent parse (X3
+stand-in) → the intent-gated retrieval templates (J2/J3 expands, P8
+filters, W1/W2 limits; one Spark plan each) → context cards (F5) → one
+assembled context string. The branch structure mirrors the reference's
+retrieve() exactly:
 
 - disease entities → disease info card + covering-insurance line
   (graph_retriever.py:44-86);
@@ -24,77 +25,18 @@ input, same as the reference.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from kgspark.query import cards, retriever
 
 
-def retrieve_context(
-    nodes: DataFrame,
-    edges: DataFrame,
-    question: str,
-    known_diseases: list[str] | None = None,
-    seed: int | None = 42,
-) -> dict:
-    """Question -> {"parsed": intent dict, "context": str}.
-
-    ``known_diseases``: entity dictionary for mention-style disease
-    detection in the question (defaults to the graph's Disease names —
-    one dimension-scale collect, same budget as the broadcast dictionary
-    the mention stage uses). ``seed`` feeds the deterministic
-    recommendation shuffle (W1).
-    """
-    from pyspark.sql import functions as F
-
-    if known_diseases is None:
-        known_diseases = [
-            r["name"]
-            for r in nodes.filter(F.col("label") == "Disease").select("name").collect()
-        ]
-    parsed = retriever.parse_query_rules(question, known_diseases=known_diseases)
-    intent = parsed.get("intent")
-    age = parsed.get("age")
-    city = parsed.get("city")
-    price_max = parsed.get("price_max")
-
-    card_dfs: list[DataFrame] = []
-    for disease in parsed.get("disease", []):
-        card_dfs.append(
-            cards.disease_info_cards(retriever.disease_expand(nodes, edges, disease))
-        )
-        card_dfs.append(
-            cards.covering_insurance_card(
-                retriever.insurance_covering(nodes, edges, disease), disease
-            )
-        )
-    if age is not None and age >= 60:
-        card_dfs.append(
-            cards.age_insurance_card(retriever.insurance_for_age(nodes, edges, age), age)
-        )
-    if intent == "insurance_query":
-        series = next((s for s in retriever.KNOWN_SERIES if s in question), None)
-        card_dfs.append(
-            cards.insurance_product_cards(
-                retriever.insurance_search(nodes, question, seed=seed), keyword=series
-            )
-        )
-    if intent == "nursing_home_search" or city or price_max:
-        card_dfs.append(
-            cards.nursing_home_cards(
-                retriever.nursing_home_search(nodes, city=city, price_max=price_max),
-                city,
-                price_max,
-            )
-        )
-    return {"parsed": parsed, "context": cards.assemble_context(card_dfs)}
-
-
 class ContextRetriever:
-    """Serving-loop wrapper around :func:`retrieve_context`: collects the
-    Disease entity dictionary ONCE at construction and reuses it for every
-    question — the analogue of the mention stage's broadcast dictionary
-    (a per-question dictionary collect is wasted work in a chat loop; the
-    dictionary only changes when the graph is republished, at which point
-    the caller builds a fresh retriever over the new snapshot).
+    """Question answering over one graph snapshot. The Disease entity
+    dictionary (for mention-style disease detection in the question) is
+    collected ONCE, at construction — the analogue of the mention stage's
+    broadcast dictionary; the dictionary only changes when the graph is
+    republished, and then the caller builds a fresh retriever over the new
+    snapshot. ``seed`` feeds the deterministic recommendation shuffle (W1).
 
     >>> rc = ContextRetriever(nodes, edges)
     >>> rc.ask("高血压有什么症状？")["context"]
@@ -104,22 +46,29 @@ class ContextRetriever:
         self.nodes = nodes
         self.edges = edges
         self.seed = seed
-        self.known_diseases = self._collect_diseases(nodes)
-
-    @staticmethod
-    def _collect_diseases(nodes: DataFrame) -> list[str]:
-        from pyspark.sql import functions as F
-
-        return [
-            r["name"]
-            for r in nodes.filter(F.col("label") == "Disease").select("name").collect()
+        self.diseases = [
+            r["name"] for r in nodes.filter(F.col("label") == "Disease").select("name").collect()
         ]
 
     def ask(self, question: str) -> dict:
-        return retrieve_context(
-            self.nodes,
-            self.edges,
-            question,
-            known_diseases=self.known_diseases,
-            seed=self.seed,
-        )
+        """Question -> {"parsed": intent dict, "context": str}."""
+        nodes, edges = self.nodes, self.edges
+        parsed = retriever.parse_query_rules(question, known_diseases=self.diseases)
+        intent, age = parsed["intent"], parsed.get("age")
+        city, price_max = parsed.get("city"), parsed.get("price_max")
+        parts: list[str | None] = []
+        for disease in parsed.get("disease", []):
+            parts += map(cards.disease_card, retriever.disease_expand(nodes, edges, disease))
+            parts.append(cards.covering_insurance_card(
+                retriever.insurance_covering(nodes, edges, disease), disease))
+        if age is not None:
+            parts.append(cards.age_insurance_card(retriever.insurance_for_age(nodes, edges, age), age))
+        if intent == "insurance_query":
+            series = next((s for s in retriever.KNOWN_SERIES if s in question), None)
+            parts.append(cards.insurance_product_cards(
+                retriever.insurance_search(nodes, question, seed=self.seed), keyword=series))
+        if intent == "nursing_home_search" or city or price_max:
+            parts.append(cards.nursing_home_cards(
+                retriever.nursing_home_search(nodes, city=city, price_max=price_max),
+                city, price_max))
+        return {"parsed": parsed, "context": cards.assemble_context(parts)}

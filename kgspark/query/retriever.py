@@ -1,110 +1,95 @@
-"""GraphRAG retrieval templates as DataFrame plans (SURVEY §3.2).
+"""GraphRAG retrieval templates, one Spark plan each (SURVEY §3.2).
 
 Each function mirrors one Cypher template in the reference's
-``graph_retriever.py`` over the (nodes, edges) tables. The node dictionary
-side of every join is broadcast — entity dictionaries are dims, edges are
-facts. Query parsing/LLM stages are driver-side and out of data-plane scope;
-``parse_query_rules`` is the deterministic stand-in used by tests.
+``graph_retriever.py`` over the (nodes, edges) tables and returns the
+collected rows. Entity identity is a hash (``graph.entity_id``), so a
+template names its anchor entity by its id literal instead of joining the
+node dictionary to find it: an edge template filters ``edges`` on that id
+and joins ``nodes`` once, for the names or props of the other end. Every
+result is LIMIT-bounded or bounded by one entity's degree. Relation labels
+are fixed by the ontology: ``COVERS_DISEASE`` and ``TARGETS_POPULATION``
+come only from ``ontology.INSURANCE_RULES`` (Insurance -> Disease /
+Population; the web extractor emits ``COVERS``, not ``COVERS_DISEASE``).
+Query parsing/LLM stages are driver-side and out of data-plane scope;
+``parse_query_rules`` is the deterministic stand-in.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
+from kgspark.construct.graph import entity_id
 
-def _named(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """edges resolved to names: (src_label, src_name, rel, dst_label, dst_name)."""
-    n = nodes.select("entity_id", "label", "name")
-    return (
-        edges.join(F.broadcast(n.alias("s")), F.col("src_id") == F.col("s.entity_id"))
-        .join(F.broadcast(n.alias("o")), F.col("dst_id") == F.col("o.entity_id"))
-        .select(
-            F.col("s.label").alias("src_label"),
-            F.col("s.name").alias("src_name"),
-            "rel",
-            F.col("o.label").alias("dst_label"),
-            F.col("o.name").alias("dst_name"),
-        )
-    )
+# disease_expand: relation -> result field (graph_retriever.py:47-55)
+_EXPAND_RELS = {"HAS_SYMPTOM": "symptoms", "HAS_COMPLICATION": "complications",
+                "TREATED_BY": "drugs"}
 
 
-def disease_expand(nodes: DataFrame, edges: DataFrame, disease: str) -> DataFrame:
-    """J2: 1-hop expand — complications/drugs/symptoms of one disease as
-    sorted collect_sets (graph_retriever.py:47-55, collect DISTINCT A3)."""
-    named = _named(nodes, edges)
-    mine = named.filter(
-        (F.col("src_label") == "Disease") & (F.col("src_name") == disease)
-    )
-    agg = mine.groupBy("src_name").agg(
-        F.sort_array(
-            F.collect_set(F.when(F.col("rel") == "HAS_COMPLICATION", F.col("dst_name")))
-        ).alias("complications"),
-        F.sort_array(
-            F.collect_set(F.when(F.col("rel") == "TREATED_BY", F.col("dst_name")))
-        ).alias("drugs"),
-        F.sort_array(
-            F.collect_set(F.when(F.col("rel") == "HAS_SYMPTOM", F.col("dst_name")))
-        ).alias("symptoms"),
-    )
-    props = nodes.filter(
-        (F.col("label") == "Disease") & (F.col("name") == disease)
-    ).select(
-        F.col("name").alias("src_name"),
-        F.col("props")["intro"].alias("intro"),
-        F.col("props")["treat_detail"].alias("treat_detail"),
-    )
-    empty = F.array().cast("array<string>")
-    return props.join(agg, "src_name", "left").select(
-        F.col("src_name").alias("disease"),
-        "intro",
-        "treat_detail",
-        # Cypher collect(DISTINCT ...) yields [] when OPTIONAL MATCH finds none
-        F.coalesce("symptoms", empty).alias("symptoms"),
-        F.coalesce("complications", empty).alias("complications"),
-        F.coalesce("drugs", empty).alias("drugs"),
-    )
+def _id(label: str, name: str):
+    return entity_id(F.lit(label), F.lit(name))
 
 
-def insurance_covering(nodes: DataFrame, edges: DataFrame, disease: str) -> DataFrame:
+def disease_expand(nodes: DataFrame, edges: DataFrame, disease: str) -> list[dict]:
+    """J2: 1-hop expand (graph_retriever.py:47-55) -> [] when the disease is
+    not a node, else one dict: disease, intro, treat_detail and the sorted
+    distinct symptoms/complications/drugs (Cypher collect(DISTINCT), A3;
+    [] when OPTIONAL MATCH finds none). One join: the disease's own id
+    (rel null) plus its out-edges, against ``nodes``."""
+    did = _id("Disease", disease)
+    keys = edges.filter((F.col("src_id") == did) & F.col("rel").isin(*_EXPAND_RELS)).select(
+        "rel", F.col("dst_id").alias("id")
+    ).unionByName(edges.sparkSession.range(1).select(
+        F.lit(None).cast("string").alias("rel"), did.alias("id")))
+    rows = nodes.join(F.broadcast(keys), F.col("entity_id") == F.col("id")).select(
+        "rel", "name", "props").collect()
+    me = [r for r in rows if r["rel"] is None]
+    if not me:
+        return []
+    props = me[0]["props"] or {}
+    out = {"disease": disease, "intro": props.get("intro"),
+           "treat_detail": props.get("treat_detail")}
+    for rel, field in _EXPAND_RELS.items():
+        out[field] = sorted({r["name"] for r in rows if r["rel"] == rel})
+    return [out]
+
+
+def _insurances_to(nodes: DataFrame, edges: DataFrame, rel: str, dst_id) -> DataFrame:
+    """Insurance nodes with a ``rel`` edge to the entity ``dst_id``."""
+    hits = edges.filter((F.col("rel") == rel) & (F.col("dst_id") == dst_id))
+    return nodes.filter(F.col("label") == "Insurance").join(
+        F.broadcast(hits), F.col("entity_id") == F.col("src_id"))
+
+
+def insurance_covering(nodes: DataFrame, edges: DataFrame, disease: str) -> list[Row]:
     """J3: reverse-edge join — insurances covering a disease
-    (graph_retriever.py:78-82)."""
-    named = _named(nodes, edges)
-    ins = named.filter(
-        (F.col("rel") == "COVERS_DISEASE") & (F.col("dst_name") == disease)
-    ).select(F.col("src_name").alias("ins_name"))
-    props = nodes.filter(F.col("label") == "Insurance").select(
+    (graph_retriever.py:78-82): rows of (ins_name, description, age_limit)."""
+    return _insurances_to(nodes, edges, "COVERS_DISEASE", _id("Disease", disease)).select(
         F.col("name").alias("ins_name"),
         F.col("props")["description"].alias("description"),
         F.col("props")["age_limit"].alias("age_limit"),
-    )
-    return ins.join(props, "ins_name")
+    ).collect()
 
 
-def insurance_for_age(nodes: DataFrame, edges: DataFrame, age: int, limit: int = 5) -> DataFrame:
+def insurance_for_age(nodes: DataFrame, edges: DataFrame, age: int) -> list[Row]:
     """Age-targeted insurance (graph_retriever.py:89-102): age >= 60 ->
-    TARGETS_POPULATION('老年人') products, LIMIT 5; deterministic order."""
+    TARGETS_POPULATION('老年人') products, LIMIT 5, in name order."""
     if age < 60:
-        return nodes.sparkSession.createDataFrame([], "ins_name string, age_limit string")
-    named = _named(nodes, edges)
-    hits = named.filter(
-        (F.col("rel") == "TARGETS_POPULATION") & (F.col("dst_name") == "老年人")
-    ).select(F.col("src_name").alias("ins_name"))
-    props = nodes.filter(F.col("label") == "Insurance").select(
+        return []
+    return _insurances_to(
+        nodes, edges, "TARGETS_POPULATION", _id("Population", "老年人")
+    ).select(
         F.col("name").alias("ins_name"), F.col("props")["age_limit"].alias("age_limit")
-    )
-    return hits.join(props, "ins_name").orderBy("ins_name").limit(limit)
+    ).orderBy("ins_name").limit(5).collect()
 
 
 KNOWN_SERIES = ["蓝医保", "好医保", "金医保", "平安", "众安", "长相安"]
 GENERIC_KEYWORDS = ["重疾", "医疗", "护理", "防癌"]
 
 
-def insurance_search(
-    nodes: DataFrame, raw_query: str, seed: int | None = 42, limit: int | None = None
-) -> DataFrame:
+def insurance_search(nodes: DataFrame, raw_query: str, seed: int | None = 42) -> list[Row]:
     """P8 + W1/W2 (graph_retriever.py:112-156): series keyword in the query
     -> precise CONTAINS search LIMIT 6; otherwise generic-keyword filter with
     pseudo-random order LIMIT 20 — the reference's ORDER BY rand() for
@@ -121,18 +106,19 @@ def insurance_search(
     )
     series = next((s for s in KNOWN_SERIES if s in raw_query), None)
     if series:
-        return ins.filter(F.col("name").contains(series)).orderBy("name").limit(limit or 6)
+        return ins.filter(F.col("name").contains(series)).orderBy("name").limit(6).collect()
     cond = F.col("name").contains(GENERIC_KEYWORDS[0])
     for kw in GENERIC_KEYWORDS[1:]:
         cond = cond | F.col("name").contains(kw)
-    return ins.filter(cond).orderBy(F.xxhash64("name", F.lit(seed)), "name").limit(limit or 20)
+    return ins.filter(cond).orderBy(F.xxhash64("name", F.lit(seed)), "name").limit(20).collect()
 
 
 def nursing_home_search(
-    nodes: DataFrame, city: str | None = None, price_max: int | None = None, limit: int = 5
-) -> DataFrame:
+    nodes: DataFrame, city: str | None = None, price_max: int | None = None
+) -> list[Row]:
     """WHERE-clause assembly (graph_retriever.py:182-214): city matches
-    address OR name; price is a string cast to int at query time (P8/F9)."""
+    address OR name; price is a string cast to int at query time (P8/F9);
+    LIMIT 5 in name order."""
     nh = nodes.filter(F.col("label") == "NursingHome").select(
         "name",
         F.col("props")["price"].alias("price"),
@@ -147,12 +133,12 @@ def nursing_home_search(
         # try_cast: Cypher toInteger() yields null on non-numeric strings
         # ('价格面议'), which the <= predicate then drops — not an error
         nh = nh.filter(F.col("price").try_cast("int") <= F.lit(price_max))
-    return nh.orderBy("name").limit(limit)
+    return nh.orderBy("name").limit(5).collect()
 
 
-def label_counts(nodes: DataFrame) -> DataFrame:
+def label_counts(nodes: DataFrame) -> list[Row]:
     """A4: sidebar stats — node count per label (frontend/app.py:24-46)."""
-    return nodes.groupBy("label").agg(F.count("*").alias("n")).orderBy("label")
+    return nodes.groupBy("label").agg(F.count("*").alias("n")).orderBy("label").collect()
 
 
 # --- deterministic query parsing stand-in (X3, query_understanding.py) -----

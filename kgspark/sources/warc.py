@@ -20,7 +20,7 @@ The Python here iterates over *files and their records* inside an
 Arrow-batched mapInPandas (the established pattern for opaque binary
 payloads, see ops/multimodal.py) — the per-row-Python guard applies to row
 UDFs over data-plane rows, and each emitted row still costs only one
-dict-append here. Parsing is stdlib-only (gzip + byte splitting): no warcio
+dict-append here. Parsing is stdlib-only (zlib + byte splitting): no warcio
 dependency in the sandbox.
 
 Reference anchor: the reference crawls pages row-at-a-time with
@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import gzip
 import io
+import zlib
 from collections.abc import Iterator
 from datetime import datetime, timezone
 
@@ -40,16 +41,39 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 _KEEP_TYPES = {"response", "conversion", "resource"}
+_PIECE = 1 << 16  # gzip input slice, bytes
+
+
+def _gzip_members(raw: bytes) -> Iterator[bytes]:
+    """Decompress concatenated gzip members one at a time, so a corrupt or
+    truncated member raises only after every member before it was yielded
+    (``gzip.decompress`` decompresses the whole file before returning any of
+    it). Input goes in ``_PIECE``-byte slices, so finding where a member ends
+    copies at most one slice. NUL padding between members is skipped, as
+    gzip does."""
+    view, pos, n = memoryview(raw), 0, len(raw)
+    while pos < n:
+        d, out = zlib.decompressobj(wbits=31), []
+        while not d.eof and pos < n:
+            out.append(d.decompress(view[pos:pos + _PIECE]))
+            pos = min(pos + _PIECE, n)
+        if not d.eof:
+            raise ValueError("truncated gzip member at end of file")
+        yield b"".join(out)
+        pos -= len(d.unused_data)
+        while pos < n and raw[pos] == 0:
+            pos += 1
 
 
 def _parse_warc_bytes(raw: bytes) -> Iterator[dict]:
     """Yield {url, warc_ts, html} dicts from one WARC file's bytes.
 
-    Accepts plain or gzip (including per-record-member concatenated gzip —
-    stdlib gzip.decompress consumes all members). Only response/conversion/
-    resource records carry page payloads; request/metadata/warcinfo records
-    are skipped. For `response` records the payload is an HTTP message: the
-    status line + headers are stripped so `html` is the entity body alone.
+    Accepts plain or gzip (including per-record-member concatenated gzip,
+    parsed member by member so the records before a corrupt member are
+    yielded before it raises). Only response/conversion/resource records
+    carry page payloads; request/metadata/warcinfo records are skipped. For
+    `response` records the payload is an HTTP message: the status line +
+    headers are stripped so `html` is the entity body alone.
 
     Corruption (truncated trailer, lost record sync, missing/unparseable
     Content-Length, payload shorter than Content-Length) raises ValueError —
@@ -57,22 +81,35 @@ def _parse_warc_bytes(raw: bytes) -> Iterator[dict]:
     quarantines the file; silent stop would make data loss invisible in
     BOTH modes.
     """
-    if raw[:2] == b"\x1f\x8b":
-        raw = gzip.decompress(raw)
+    chunks = _gzip_members(raw) if raw[:2] == b"\x1f\x8b" else iter((raw,))
+    buf, base = b"", 0
+    for chunk in chunks:
+        buf += chunk
+        pos = yield from _records(buf, base, final=False)
+        buf, base = buf[pos:], base + pos
+    yield from _records(buf, base, final=True)
+
+
+def _records(raw: bytes, base: int, final: bool) -> Iterator[dict]:
+    """Parse the complete records of ``raw``, which starts at byte ``base``
+    of the (decompressed) file; return the offset where the first incomplete
+    record starts (only a ``final`` buffer raises on it)."""
     pos, n = 0, len(raw)
     while pos < n:
         # skip inter-record CRLFs
         while raw.startswith(b"\r\n", pos) or raw.startswith(b"\n", pos):
             pos += 2 if raw.startswith(b"\r\n", pos) else 1
         if pos >= n:
-            return
+            break
         head_end = raw.find(b"\r\n\r\n", pos)
         if head_end < 0:
-            raise ValueError(f"truncated WARC header block at byte {pos}")
+            if not final:
+                return pos
+            raise ValueError(f"truncated WARC header block at byte {base + pos}")
         header_block = raw[pos:head_end].decode("utf-8", errors="replace")
         lines = header_block.split("\r\n")
         if not lines or not lines[0].startswith("WARC/"):
-            raise ValueError(f"lost WARC record sync at byte {pos}")
+            raise ValueError(f"lost WARC record sync at byte {base + pos}")
         fields: dict[str, str] = {}
         for line in lines[1:]:
             k, sep, v = line.partition(":")
@@ -84,10 +121,12 @@ def _parse_warc_bytes(raw: bytes) -> Iterator[dict]:
             length = int(fields.get("content-length", ""))
         except ValueError:
             raise ValueError(
-                f"missing/unparseable Content-Length in WARC record at byte {pos}"
+                f"missing/unparseable Content-Length in WARC record at byte {base + pos}"
             ) from None
         if head_end + 4 + length > n:
-            raise ValueError(f"truncated WARC payload at byte {head_end + 4}")
+            if not final:
+                return pos
+            raise ValueError(f"truncated WARC payload at byte {base + head_end + 4}")
         body = raw[head_end + 4 : head_end + 4 + length]
         pos = head_end + 4 + length
         rtype = fields.get("warc-type", "")
@@ -110,6 +149,7 @@ def _parse_warc_bytes(raw: bytes) -> Iterator[dict]:
             split = body.find(b"\r\n\r\n")
             body = body[split + 4 :] if split >= 0 else body
         yield {"url": url, "warc_ts": ts, "html": body}
+    return n
 
 
 def read_warc(

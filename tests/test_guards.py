@@ -66,8 +66,8 @@ def test_no_collect_outside_dimension_scale_allowlist():
         "ops/pq.py": "codebooks + query distance tables: constant-size",
         "ops/similarity.py": "IVF centroids: dimension-scale",
         "pipeline.py": "lineage rows (<= n_buckets) + Disease alias mapping: dictionary-scale",
-        "query/cards.py": "top-k card rendering: query-result scale",
-        "query/rag.py": "retrieval results: query-result scale",
+        "query/rag.py": "Disease entity dictionary, once per snapshot",
+        "query/retriever.py": "retrieval rows: LIMIT- or one-entity-degree-bounded",
         "query/subgraph.py": "BFS frontier convergence: 1-row counts",
     }
     offenders = []

@@ -19,7 +19,7 @@ def graph(spark, mini_sources):
 def test_disease_expand(graph):
     nodes, edges = graph
     d = fixtures.DISEASES[1]  # single-record disease
-    row = retriever.disease_expand(nodes, edges, d).collect()[0]
+    row = retriever.disease_expand(nodes, edges, d)[0]
     assert row["disease"] == d
     assert len(row["symptoms"]) == 3
     assert len(row["complications"]) == 2
@@ -29,7 +29,7 @@ def test_disease_expand(graph):
 
 def test_insurance_covering(graph):
     nodes, edges = graph
-    rows = retriever.insurance_covering(nodes, edges, "高血压").collect()
+    rows = retriever.insurance_covering(nodes, edges, "高血压")
     assert rows
     by_name = {r["ins_name"]: r["description"] for r in rows}
     assert "高血压" in by_name["长相安慢病保"]
@@ -42,28 +42,28 @@ def test_insurance_covering(graph):
 def test_insurance_for_age(graph):
     nodes, edges = graph
     young = retriever.insurance_for_age(nodes, edges, 30)
-    assert young.count() == 0
-    old = retriever.insurance_for_age(nodes, edges, 70).collect()
+    assert len(young) == 0
+    old = retriever.insurance_for_age(nodes, edges, 70)
     assert 0 < len(old) <= 5
 
 
 def test_insurance_search_series_vs_generic(graph):
     nodes, _ = graph
     precise = retriever.insurance_search(nodes, "推荐一下蓝医保系列")
-    assert all("蓝医保" in r["name"] for r in precise.collect())
+    assert all("蓝医保" in r["name"] for r in precise)
     generic = retriever.insurance_search(nodes, "随便推荐个保险", seed=42)
-    names = [r["name"] for r in generic.collect()]
+    names = [r["name"] for r in generic]
     assert names and all(
         any(k in n for k in retriever.GENERIC_KEYWORDS) for n in names
     )
     # seeded rand: stable across invocations
-    again = [r["name"] for r in retriever.insurance_search(nodes, "随便推荐个保险", seed=42).collect()]
+    again = [r["name"] for r in retriever.insurance_search(nodes, "随便推荐个保险", seed=42)]
     assert names == again
 
 
 def test_nursing_home_search(graph):
     nodes, _ = graph
-    rows = retriever.nursing_home_search(nodes, city="北京", price_max=7500).collect()
+    rows = retriever.nursing_home_search(nodes, city="北京", price_max=7500)
     assert rows
     for r in rows:
         assert "北京" in r["address"] or "北京" in r["name"]
@@ -106,7 +106,7 @@ def test_subgraph_unknown_entity(graph):
 
 def test_label_counts(graph):
     nodes, _ = graph
-    counts = {r["label"]: r["n"] for r in retriever.label_counts(nodes).collect()}
+    counts = {r["label"]: r["n"] for r in retriever.label_counts(nodes)}
     assert counts["Population"] == 1
     assert counts["Disease"] >= 10
 
@@ -187,50 +187,86 @@ def test_subgraph_rank_ordered_truncation(spark):
 
 def test_context_cards_exact_strings(spark):
     """F5 card templates: exact-string checks against the reference formats
-    (graph_retriever.py:64-75,171-177,218-240), including the unconditional
-    desc[:50]+'...' quirk and the >100-char services truncation."""
+    (graph_retriever.py:64-75,84-86,98-102,171-177,218-240), including the
+    unconditional desc[:50]+'...' quirk, the >100-char services truncation,
+    null/empty fields and the toInteger price filter on '价格面议'."""
     from kgspark.query import cards
 
-    expand = spark.createDataFrame(
-        [("高血压", "简介X", None, ["s1", "s2", "s3", "s4", "s5", "s6"], [], ["d1"])],
-        "disease string, intro string, treat_detail string, "
-        "symptoms array<string>, complications array<string>, drugs array<string>",
-    )
-    got = cards.disease_info_cards(expand).collect()[0]["card"]
+    def expand(disease, intro, treat, symptoms, complications, drugs):
+        return {"disease": disease, "intro": intro, "treat_detail": treat,
+                "symptoms": symptoms, "complications": complications, "drugs": drugs}
+
+    got = cards.disease_card(expand("高血压", "简介X", None, ["s1", "s2", "s3", "s4", "s5", "s6"], [], ["d1"]))
     assert got == (
         "【疾病信息】高血压:\n"
         "  - 简介: 简介X\n"
         "  - 症状: s1, s2, s3, s4, s5\n"
         "  - 常用药物: d1\n"
     )
-
-    search = spark.createDataFrame(
-        [("保A", "0-65周岁", "短描述", None, None),
-         ("保B", "18-80周岁", "长" * 60, "医疗险", None)],
-        "name string, age_limit string, desc string, category string, price string",
+    # an empty-string intro is omitted like a null one
+    assert cards.disease_card(expand("糖尿病", "", "控制血糖", [], ["c1"], [])) == (
+        "【疾病信息】糖尿病:\n  - 治疗: 控制血糖\n  - 并发症: c1\n"
     )
-    card = cards.insurance_product_cards(search, keyword="医疗").collect()[0]["card"]
+
+    def product(name, age_limit, desc, category, price):
+        return {"name": name, "age_limit": age_limit, "desc": desc, "category": category,
+                "price": price}
+
+    search = [product("保A", "0-65周岁", "短描述", None, None),
+              product("保B", "18-80周岁", "长" * 60, "医疗险", None)]
+    card = cards.insurance_product_cards(search, keyword="医疗")
     assert card.startswith("【保险产品库】(已根据关键词 '医疗' 筛选):\n")
     # short desc still gets '...' (reference's unconditional f"{desc[:50]}...")
     assert "【产品】保A\n   - 险种: 未知\n   - 投保年龄: 0-65周岁\n   - 描述: 短描述..." in card
     assert "描述: " + "长" * 50 + "..." in card and "长" * 51 not in card
-
-    nh = spark.createDataFrame(
-        [("颐养苑", "4500", "北京市朝阳区", "服" * 120, "300张", "民营")],
-        "name string, price string, address string, services string, beds string, nature string",
+    # null category, age_limit and desc
+    assert cards.insurance_product_cards([product("保C", None, None, None, None)]) == (
+        "【保险产品库】(已根据关键词 '通用' 筛选):\n"
+        "【产品】保C\n   - 险种: 未知\n   - 投保年龄: \n   - 描述: ..."
     )
-    card = cards.nursing_home_cards(nh, city="北京", price_max=5000).collect()[0]["card"]
+
+    # an item with a null age_limit drops out of the line; the line stays
+    covering = [{"ins_name": "保Y", "description": "含糖尿病保障", "age_limit": None},
+                {"ins_name": "保X", "description": "含糖尿病保障", "age_limit": "0-60周岁"}]
+    assert cards.covering_insurance_card(covering, "糖尿病") == (
+        "【推荐保险】针对 糖尿病 的相关保险产品: 保X (年龄限制: 0-60周岁)"
+    )
+    assert cards.covering_insurance_card(covering[:1], "糖尿病") == "【推荐保险】针对 糖尿病 的相关保险产品: "
+    aged = [{"ins_name": "保Z", "age_limit": "60-80周岁"}, {"ins_name": "保W", "age_limit": None}]
+    assert cards.age_insurance_card(aged, 70) == "【适老保险】适合 70 岁人群的保险产品: 保Z (60-80周岁)"
+
+    nh = [{"name": "颐养苑", "price": "4500", "address": "北京市朝阳区", "services": "服" * 120,
+           "beds": "300张", "nature": "民营"}]
+    card = cards.nursing_home_cards(nh, city="北京", price_max=5000)
     assert card.startswith("【养老机构推荐】(筛选条件: 城市=北京, 预算<5000):\n")
     assert "【颐养苑】\n  - 价格: 4500元/月\n  - 地址: 北京市朝阳区" in card
     assert "特色服务: " + "服" * 100 + "..." in card and "服" * 101 not in card
 
-    empty = nh.where("1=0")
-    fb = cards.nursing_home_cards(empty, city=None, price_max=3000).collect()[0]["card"]
+    fb = cards.nursing_home_cards([], city=None, price_max=3000)
     assert fb == "【养老机构】未找到符合条件的养老院 (城市: None, 预算: 3000)。"
 
-    assert cards.assemble_context([cards.covering_insurance_card(
-        spark.createDataFrame([], "ins_name string, description string, age_limit string"), "糖尿病"
-    )]) == cards.EMPTY_CONTEXT
+    assert cards.assemble_context([cards.covering_insurance_card([], "糖尿病")]) == cards.EMPTY_CONTEXT
+
+    # services of exactly 100 (kept whole) and 101 chars (cut to 100 + '...');
+    # a non-numeric price is dropped by a price filter, kept without one
+    homes = spark.createDataFrame(
+        [(1, "NursingHome", "甲苑", {"price": "4500", "address": "北京市海淀区",
+                                    "services": "服" * 100, "nature": ""}),
+         (2, "NursingHome", "乙苑", {"price": "价格面议", "address": "北京市朝阳区",
+                                    "services": "务" * 101, "beds": "200张", "nature": "公办"})],
+        "entity_id long, label string, name string, props map<string,string>",
+    )
+    jia = "【甲苑】\n  - 价格: 4500元/月\n  - 地址: 北京市海淀区\n  - 特色服务: " + "服" * 100
+    yi = ("【乙苑】\n  - 价格: 价格面议元/月\n  - 地址: 北京市朝阳区\n  - 性质: 公办\n  - 床位: 200张"
+          "\n  - 特色服务: " + "务" * 100 + "...")
+    rows = retriever.nursing_home_search(homes, city="北京", price_max=5000)
+    assert cards.nursing_home_cards(rows, "北京", 5000) == (
+        "【养老机构推荐】(筛选条件: 城市=北京, 预算<5000):\n" + jia
+    )
+    rows = retriever.nursing_home_search(homes, city="北京")
+    assert cards.nursing_home_cards(rows, "北京", None) == (
+        "【养老机构推荐】(筛选条件: 城市=北京, 预算<不限):\n" + yi + "\n" + jia
+    )
 
 
 def test_context_cards_end_to_end(graph):
@@ -243,13 +279,59 @@ def test_context_cards_end_to_end(graph):
     nodes, edges = graph
     d = fixtures.DISEASES[1]
     expand = retriever.disease_expand(nodes, edges, d)
-    info = cards.disease_info_cards(expand)
+    info = [cards.disease_card(r) for r in expand]
     age = cards.age_insurance_card(retriever.insurance_for_age(nodes, edges, 70), 70)
     nh = cards.nursing_home_cards(
         retriever.nursing_home_search(nodes, city=None, price_max=None), None, None
     )
-    ctx = cards.assemble_context([info, age, nh])
+    ctx = cards.assemble_context([*info, age, nh])
     assert f"【疾病信息】{d}:" in ctx
     assert "  - 症状: " in ctx
     assert "【养老机构推荐】" in ctx
     assert ctx.count("\n\n") >= 1
+
+
+def test_context_retriever_one_plan_per_template(spark, graph, tmp_path, monkeypatch):
+    """ContextRetriever collects the Disease dictionary once, at
+    construction; each question then runs one Spark plan per retrieval
+    template it asks (none for an unanswerable one), each with at most one
+    join, and its context is the templates' cards joined. The graph is read
+    back from parquet, as a server reads a published snapshot, so the plans
+    hold only the retrieval's own operators."""
+    from kgspark import fixtures
+    from kgspark.query import cards
+    from kgspark.query.rag import ContextRetriever
+
+    for name, df in zip(("nodes", "edges"), graph):
+        df.write.parquet(str(tmp_path / name))
+    nodes, edges = (spark.read.parquet(str(tmp_path / n)) for n in ("nodes", "edges"))
+    plans = []
+    collect = type(nodes).collect
+
+    def spy(df):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return collect(df)
+
+    monkeypatch.setattr(type(nodes), "collect", spy)
+    rc = ContextRetriever(nodes, edges)
+    assert len(plans) == 1
+    d = fixtures.DISEASES[1]
+    assert retriever.parse_query_rules(f"{d}有什么症状？", rc.diseases)["disease"] == [d]
+    questions = {
+        f"{d}有什么症状？": 2,
+        "70岁老人能买什么保险？": 2,
+        "北京有哪些5000元以下的养老院？": 1,
+        "今天天气怎么样": 0,
+    }
+    for q, n_plans in questions.items():
+        plans.clear()
+        got = rc.ask(q)
+        assert len(plans) == n_plans, q
+        assert all(p.count("Join ") <= 1 for p in plans), plans
+        if n_plans == 0:
+            assert got["context"] == cards.EMPTY_CONTEXT
+    want = cards.assemble_context([
+        *map(cards.disease_card, retriever.disease_expand(nodes, edges, d)),
+        cards.covering_insurance_card(retriever.insurance_covering(nodes, edges, d), d),
+    ])
+    assert rc.ask(f"{d}有什么症状？")["context"] == want

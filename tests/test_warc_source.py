@@ -141,6 +141,21 @@ def test_warc_midstream_corruption_raises_not_silent(spark, tmp_path):
     assert 0 < len(kept) < 4
     assert {r["url"] for r in kept} <= {u for u, _, _ in docs}
 
+    # Common Crawl layout, one gzip member per record: a truncated last
+    # member costs that record only; the members before it are kept
+    docs = _docs(5)
+    write_synthetic_warc(str(tmp_path / "t.warc"), docs, gzip_members=True)
+    raw = (tmp_path / "t.warc").read_bytes()
+    (tmp_path / "t.warc").write_bytes(raw[: len(raw) - 30])
+    parsed = []
+    with _pytest.raises(ValueError, match="truncated gzip member"):
+        parsed.extend(r["url"] for r in _parse_warc_bytes(raw[: len(raw) - 30]))
+    assert parsed == [u for u, _, _ in docs[:4]]
+    with _pytest.raises(Exception):
+        read_warc(spark, str(tmp_path), on_error="fail").count()
+    kept = read_warc(spark, str(tmp_path), on_error="skip").collect()
+    assert sorted(r["url"] for r in kept) == sorted(u for u, _, _ in docs[:4])
+
 
 def test_warc_fuzz_roundtrip(spark, tmp_path):
     """Property: any (url, ts, payload) docs — including payloads containing
