@@ -27,11 +27,23 @@ cover the residual.
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
 from functools import reduce
 from itertools import chain
+from pathlib import Path
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+# every graph table is laid out by ``bucket = _bucket(key, n)`` of its key
+# column; the count a graph was written with is kept in ``_BUCKETS`` beside
+# its tables (Spark's reader skips ``_`` files)
+_N_BUCKETS = 32
+_TABLES = (("nodes", "entity_id"), ("edges", "src_id"))
+_EDGE_KEY = ["src_id", "rel", "dst_id"]
 
 
 def entity_id(label, name):
@@ -128,7 +140,7 @@ def edges_from_triples(triples: DataFrame) -> DataFrame:
             F.col("pred").alias("rel"),
             entity_id(F.col("obj_type"), F.col("obj")).alias("dst_id"),
         )
-        .dropDuplicates(["src_id", "rel", "dst_id"])
+        .dropDuplicates(_EDGE_KEY)
     )
 
 
@@ -164,65 +176,83 @@ def edges_with_provenance(doc_triples: DataFrame, max_urls: int = 3) -> DataFram
 def build_graph(
     node_record_frames: list[DataFrame], triples: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """U1 + A1 + A2: union all sources' MERGE records with edge-endpoint
-    stubs, canonicalize, and materialize distinct edges."""
-    records = reduce(lambda a, b: a.unionByName(b), node_record_frames)
-    records = records.unionByName(stub_records_from_triples(triples))
+    """U1 + A1 + A2: union all sources' MERGE records (none is fine) with
+    edge-endpoint stubs, canonicalize, and materialize distinct edges."""
+    records = reduce(DataFrame.unionByName, node_record_frames, stub_records_from_triples(triples))
     return canonicalize_nodes(records), edges_from_triples(triples)
 
 
-def save_graph(
-    nodes: DataFrame, edges: DataFrame, out_dir: str, n_buckets: int = 32
+def _bucket(entity, n_buckets: int):
+    return F.pmod(entity, F.lit(n_buckets)).cast("int")
+
+
+def _graph_buckets(out_dir: str) -> int:
+    with open(f"{out_dir}/_BUCKETS", encoding="utf-8") as f:
+        return int(f.read())
+
+
+def _write_graph(
+    nodes: DataFrame, edges: DataFrame, out_dir: str, n_buckets: int, buckets=None
 ) -> None:
-    """S7: bucketed graph write.
+    """S7, the one bucketed graph writer. Each table is partitioned by
+    ``bucket = pmod(key, n_buckets)`` (hidden partitioning in Iceberg terms;
+    plain parquet partitioning here since the sandbox has no Iceberg catalog
+    jars) and sorted by its key within each bucket, so parquet row-group
+    min/max stats make point lookups skip row groups, not just partitions.
 
-    Files are laid out by ``bucket = pmod(entity_id hash, n_buckets)`` (hidden
-    partitioning in Iceberg terms; plain parquet partitioning here since the
-    sandbox has no Iceberg catalog jars). Downstream src/dst joins read
-    co-bucketed files. ``overwrite`` keeps full rebuilds idempotent — the
-    declarative replacement for the reference's ``MATCH (n) DETACH DELETE n``
-    re-init (S9, neo4j_loader.py:26-31).
+    Both tables are written to ``out_dir/_staged`` first; only after both
+    writes have committed are the live bucket directories replaced: every
+    bucket (``buckets=None``: the whole table) or only the listed ones. The
+    live tables are never the target of a job that reads them, and a failed
+    write leaves them untouched. The swap is directory renames, not one
+    atomic step: a crash mid-swap leaves a mixed graph with the staged data
+    still on disk. Readers that must never see that use ``publish_graph``.
     """
-    # sortWithinPartitions: parquet row-group min/max stats on the id column
-    # become selective, so point lookups skip row groups, not just partitions
-    (
-        nodes.withColumn("bucket", F.pmod(F.col("entity_id"), F.lit(n_buckets)))
-        .sortWithinPartitions("entity_id")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{out_dir}/nodes")
-    )
-    (
-        edges.withColumn("bucket", F.pmod(F.col("src_id"), F.lit(n_buckets)))
-        .sortWithinPartitions("src_id")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{out_dir}/edges")
-    )
+    staged = Path(out_dir, "_staged")
+    shutil.rmtree(staged, ignore_errors=True)
+    for (table, key), df in zip(_TABLES, (nodes, edges)):
+        (
+            df.withColumn("bucket", _bucket(F.col(key), n_buckets))
+            .sortWithinPartitions("bucket", key)
+            .write.partitionBy("bucket")
+            .parquet(str(staged / table))
+        )
+    for table, _ in _TABLES:
+        live, new = Path(out_dir, table), staged / table
+        if buckets is None:
+            shutil.rmtree(live, ignore_errors=True)
+            new.rename(live)
+            continue
+        live.mkdir(parents=True, exist_ok=True)
+        for b in buckets:
+            shutil.rmtree(live / f"bucket={b}", ignore_errors=True)
+            if (new / f"bucket={b}").exists():  # a merged bucket is empty only if it was
+                (new / f"bucket={b}").rename(live / f"bucket={b}")
+    Path(out_dir, "_BUCKETS").write_text(str(n_buckets), encoding="utf-8")
+    shutil.rmtree(staged)
 
 
-def lookup_entity(
-    spark, out_dir: str, label: str, name: str, n_buckets: int = 32
-) -> DataFrame:
+def save_graph(
+    nodes: DataFrame, edges: DataFrame, out_dir: str, n_buckets: int = _N_BUCKETS
+) -> None:
+    """Write the whole graph to ``out_dir/{nodes,edges}/bucket=k``
+    (``_write_graph``). Replacing every bucket keeps full rebuilds
+    idempotent — the declarative replacement for the reference's
+    ``MATCH (n) DETACH DELETE n`` re-init (S9, neo4j_loader.py:26-31).
+    """
+    _write_graph(nodes, edges, out_dir, n_buckets)
+
+
+def lookup_entity(spark, out_dir: str, label: str, name: str) -> DataFrame:
     """Point lookup against the saved layout, O(1/buckets) of the table:
-    the entity id (and thus its bucket) is COMPUTED driver-side — identity is
-    a hash, never a dictionary join — so the scan carries a partition filter
-    (only one bucket directory listed/read) plus an id predicate that prunes
-    parquet row groups via the sorted-write min/max stats."""
-    import ctypes
-
-    row = (
-        spark.range(1)
-        .select(F.xxhash64(F.lit(label), F.lit(name)).alias("id"))
-        .first()
-    )
-    eid = int(row["id"])
-    bucket = int(ctypes.c_int64(eid).value % n_buckets)
-    if bucket < 0:  # pmod semantics
-        bucket += n_buckets
-    return (
-        spark.read.parquet(f"{out_dir}/nodes")
-        .filter((F.col("bucket") == bucket) & (F.col("entity_id") == eid))
+    identity is a hash, never a dictionary join, so the entity id and its
+    bucket are literal expressions Spark folds to constants. The scan
+    carries a partition filter (only one bucket directory listed/read) plus
+    an id predicate that prunes parquet row groups via the sorted write's
+    min/max stats."""
+    eid = entity_id(F.lit(label), F.lit(name))
+    return spark.read.parquet(f"{out_dir}/nodes").filter(
+        (F.col("bucket") == _bucket(eid, _graph_buckets(out_dir))) & (F.col("entity_id") == eid)
     )
 
 
@@ -231,162 +261,80 @@ def merge_into_graph(
     out_dir: str,
     node_record_frames: list[DataFrame],
     triples: DataFrame,
-    n_buckets: int = 32,
+    n_buckets: int = _N_BUCKETS,
 ) -> dict:
     """Incremental graph maintenance: fold a NEW batch of MERGE records +
-    triples into an existing ``save_graph`` layout, rewriting ONLY the
-    entity-id buckets the batch touches (dynamic partition overwrite).
+    triples into the graph under ``out_dir`` (none yet is an empty graph),
+    rewriting ONLY the entity-id buckets the batch touches.
 
     Semantics = the reference's append-mode ``load_all``: re-running a loader
-    over new data MERGEs into the live graph — new records' properties
-    outrank existing node properties (last-write-wins continues across
-    batches: existing nodes re-enter canonicalization as seq=0 records, new
-    SET records are shifted to seq>=1), stubs never wipe props, edges union
-    distinct.
+    over new data MERGEs into the live graph. The merge is ``build_graph``
+    over the touched buckets' existing nodes as seq-0 records and the batch's
+    records shifted to seq>=1 (last-write-wins continues across batches,
+    stubs never wipe props), plus their existing edges (edges union
+    distinct). An edge's bucket is its source's, and every source is a stub
+    of the batch, so one probe of the batch's entity buckets serves both
+    tables.
 
     Cost model at 100 TB: a batch touching K of N buckets reads and rewrites
     K/N of the node/edge tables; the untouched partitions are never scanned
     (partition pruning on the bucket column) and never rewritten. A daily
     crawl increment is ~10^-3 of the corpus, so this is ~1000x cheaper than
     the full ``build_graph`` recompute — equivalence to the full rebuild is
-    asserted in tests.
+    asserted in tests. Durability is ``_write_graph``'s staged swap.
 
-    Durability: merged buckets are STAGED to a ``._merge`` temp subdir and
-    swapped in per bucket only after the write job succeeds — the live
-    table is never the write target of a job that is also reading it, and
-    a failure before the swap leaves the table untouched. The swap itself
-    is per-bucket (not one atomic pointer flip); a driver crash mid-swap
-    leaves a mixed table but with the staged data intact on disk for
-    recovery. Crash-sensitive / concurrent callers should layer
-    ``publish_graph`` (atomic ``_CURRENT`` pointer) on top.
-
-    Returns {"affected_buckets": K, "n_buckets": N}.
+    Raises ``ValueError`` when the graph was written with a bucket count
+    other than ``n_buckets``. Returns {"affected_buckets": K, "n_buckets": N}.
     """
-    from pathlib import Path
-
-    if not Path(f"{out_dir}/nodes").exists():  # bootstrap: first batch
-        frames = node_record_frames or [
-            triples.sparkSession.createDataFrame(
-                [], schema="label string, name string, props map<string,string>, seq long"
-            )
-        ]
-        nodes, edges = build_graph(frames, triples)
-        save_graph(nodes, edges, out_dir, n_buckets=n_buckets)
-        return {"affected_buckets": n_buckets, "n_buckets": n_buckets}
-
-    # the batch feeds four actions below (two bucket probes, two writes):
-    # materialize it by the first one, so its source is read once
+    written = _graph_buckets(out_dir) if os.path.exists(f"{out_dir}/nodes") else None
+    if written not in (None, n_buckets):
+        raise ValueError(f"{out_dir} has {written} buckets; merging with {n_buckets}")
+    # the batch feeds the bucket probe and both writes: materialize it by
+    # the probe, so its source is read once
     triples = triples.localCheckpoint(eager=False)
-    records = (
-        reduce(lambda a, b: a.unionByName(b), node_record_frames).localCheckpoint(eager=False)
-        if node_record_frames
-        else None
-    )
-    stubs = stub_records_from_triples(triples)
-    new_records = (
-        records.withColumn("seq", F.col("seq") + F.lit(1)).unionByName(stubs)
-        if records is not None
-        else stubs
-    )
-
-    bucket_of = lambda c: F.pmod(c, F.lit(n_buckets))
-    touched = (
-        new_records.select(bucket_of(entity_id(F.col("label"), F.col("name"))).alias("bucket"))
-        .distinct()
-        .collect()
-    )
-    affected = sorted(int(r["bucket"]) for r in touched)
-
-    old_nodes = spark.read.parquet(f"{out_dir}/nodes").filter(
-        F.col("bucket").isin(affected)
-    )
-    old_as_records = old_nodes.select(
-        "label", "name", "props", F.lit(0).cast("long").alias("seq")
-    )
-    merged_nodes = canonicalize_nodes(old_as_records.unionByName(new_records))
-    _staged_bucket_swap(
-        spark,
-        merged_nodes.withColumn("bucket", bucket_of(F.col("entity_id"))),
-        f"{out_dir}/nodes",
-        affected,
+    records = [
+        reduce(DataFrame.unionByName, node_record_frames)
+        .withColumn("seq", F.col("seq") + F.lit(1))
+        .localCheckpoint(eager=False)
+    ] if node_record_frames else []
+    batch = reduce(DataFrame.unionByName, records, stub_records_from_triples(triples))
+    touched = sorted(
+        r["bucket"]
+        for r in batch.select(
+            _bucket(entity_id(F.col("label"), F.col("name")), n_buckets).alias("bucket")
+        ).distinct().collect()
     )
 
-    new_edges = edges_from_triples(triples)
-    edge_buckets = sorted(
-        int(r["bucket"])
-        for r in new_edges.select(bucket_of(F.col("src_id")).alias("bucket")).distinct().collect()
-    )
-    old_edges = spark.read.parquet(f"{out_dir}/edges").filter(
-        F.col("bucket").isin(edge_buckets)
-    ).select("src_id", "rel", "dst_id")
-    merged_edges = old_edges.unionByName(new_edges).dropDuplicates(
-        ["src_id", "rel", "dst_id"]
-    )
-    _staged_bucket_swap(
-        spark,
-        merged_edges.withColumn("bucket", bucket_of(F.col("src_id"))),
-        f"{out_dir}/edges",
-        edge_buckets,
-    )
-    return {"affected_buckets": len(set(affected) | set(edge_buckets)), "n_buckets": n_buckets}
-
-
-def _staged_bucket_swap(spark, df, table_path: str, buckets: list[int]) -> None:
-    """Write ``df`` (bucket-partitioned) to ``<table>._merge`` and swap the
-    listed bucket directories into the live table. The live path is never a
-    concurrent read+write target, and nothing is removed until the full
-    staged write has committed. Per-bucket swap, not atomic — see
-    ``merge_into_graph`` docstring."""
-    import shutil
-    from pathlib import Path
-
-    staged = f"{table_path}._merge"
-    (
-        df.write.mode("overwrite").partitionBy("bucket").parquet(staged)
-    )
-    for b in buckets:
-        src = Path(staged) / f"bucket={b}"
-        dst = Path(table_path) / f"bucket={b}"
-        if dst.exists():
-            shutil.rmtree(dst)
-        if src.exists():  # a bucket can merge to empty only if it was empty
-            shutil.move(str(src), str(dst))
-    shutil.rmtree(staged, ignore_errors=True)
+    old_records, old_edges = [], []
+    if written is not None:
+        old_nodes, old_edge_rows = (
+            spark.read.parquet(f"{out_dir}/{table}").filter(F.col("bucket").isin(touched))
+            for table, _ in _TABLES
+        )
+        old_records = [old_nodes.select("label", "name", "props", F.lit(0).cast("long").alias("seq"))]
+        old_edges = [old_edge_rows.select(*_EDGE_KEY)]
+    nodes, edges = build_graph(old_records + records, triples)
+    edges = reduce(DataFrame.unionByName, old_edges, edges).dropDuplicates(_EDGE_KEY)
+    _write_graph(nodes, edges, out_dir, n_buckets, buckets=touched)
+    return {"affected_buckets": len(touched), "n_buckets": n_buckets}
 
 
 def compact_graph(spark, out_dir: str) -> dict:
-    """Operational companion to ``merge_into_graph``: every incremental merge
-    rewrites its buckets as fresh files, so a long-lived graph accumulates
-    small files (the classic streaming-table problem; Iceberg calls this
-    rewrite_data_files). Compaction rewrites each table to ONE file per
-    bucket partition — content unchanged (row-count-guarded swap, equality
-    asserted in tests), scan tasks per query drop from O(merges x buckets)
-    to O(buckets). A production deployment with buckets larger than one task
-    swaps this for Iceberg's size-targeted rewrite; the bucket key itself is
-    the repartition key, so compaction is one shuffle whose output
-    co-locates exactly with the existing layout.
+    """Operational companion to ``merge_into_graph``: a write leaves one
+    file per writing task in each bucket it touches, so a bucket holds as
+    many small files as the task count of the write that last replaced it.
+    Compaction rewrites each table to ONE file per bucket partition —
+    content unchanged (equality asserted in tests), scan tasks per query
+    drop to O(buckets). A production deployment with buckets larger than one
+    task swaps this for Iceberg's size-targeted rewrite; the bucket key
+    itself is the repartition key, so compaction is one shuffle whose output
+    co-locates exactly with the existing layout. Returns rows per table.
     """
-    stats = {}
-    for table in ("nodes", "edges"):
-        df = spark.read.parquet(f"{out_dir}/{table}")
-        (
-            df.repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{out_dir}/{table}._compact")
-        )
-        compacted = spark.read.parquet(f"{out_dir}/{table}._compact")
-        n_before, n_after = df.count(), compacted.count()
-        if n_before != n_after:  # paranoia before the destructive swap
-            raise RuntimeError(
-                f"compaction row-count drift on {table}: {n_before} -> {n_after}"
-            )
-        import shutil
-
-        shutil.rmtree(f"{out_dir}/{table}")
-        shutil.move(f"{out_dir}/{table}._compact", f"{out_dir}/{table}")
-        stats[table] = n_after
-    return stats
+    nodes, edges = (
+        spark.read.parquet(f"{out_dir}/{table}").repartition("bucket") for table, _ in _TABLES
+    )
+    _write_graph(nodes, edges, out_dir, _graph_buckets(out_dir))
+    return {table: spark.read.parquet(f"{out_dir}/{table}").count() for table, _ in _TABLES}
 
 
 def export_for_neo4j(nodes: DataFrame, edges: DataFrame, out_dir: str) -> None:
@@ -539,7 +487,7 @@ def validate_graph(nodes: DataFrame, edges: DataFrame) -> dict:
 
 
 def publish_graph(
-    nodes: DataFrame, edges: DataFrame, out_dir: str, n_buckets: int = 32
+    nodes: DataFrame, edges: DataFrame, out_dir: str, n_buckets: int = _N_BUCKETS
 ) -> int:
     """Snapshot-versioned publish: write a full graph under ``v{n}/``, then
     atomically swap the ``_CURRENT`` pointer file to it.
@@ -555,8 +503,6 @@ def publish_graph(
 
     Returns the published version number.
     """
-    import os
-
     versions = graph_versions(out_dir)
     v = (max(versions) + 1) if versions else 1
     save_graph(nodes, edges, f"{out_dir}/v{v}", n_buckets=n_buckets)
@@ -570,9 +516,6 @@ def publish_graph(
 
 def graph_versions(out_dir: str) -> list[int]:
     """All version numbers with a directory present (committed or orphan)."""
-    import os
-    import re
-
     if not os.path.isdir(out_dir):
         return []
     return sorted(
@@ -583,8 +526,6 @@ def graph_versions(out_dir: str) -> list[int]:
 
 
 def current_graph_version(out_dir: str) -> int | None:
-    import os
-
     ptr = f"{out_dir}/_CURRENT"
     if not os.path.exists(ptr):
         return None
@@ -609,8 +550,6 @@ def vacuum_graph(out_dir: str, keep: int = 2) -> list[int]:
     ``keep`` most recent committed-or-earlier versions, plus orphans newer
     than the pointer (failed publishes). Never drops the committed version.
     Returns the removed version numbers."""
-    import shutil
-
     cur = current_graph_version(out_dir)
     if cur is None:
         return []
@@ -674,7 +613,7 @@ def diff_graphs(
 def save_graph_tables(
     nodes: DataFrame,
     edges: DataFrame,
-    n_buckets: int = 32,
+    n_buckets: int = _N_BUCKETS,
     prefix: str = "kg",
     dst_copy: bool = False,
 ) -> tuple[str, str]:

@@ -116,7 +116,7 @@ def extract_stage(
     spark: SparkSession,
     pages: DataFrame,
     out_dir: str,
-    n_buckets: int = 64,
+    n_buckets: int = g._N_BUCKETS,
     run_id: str = "run-0",
     run_seq: int = 0,
     resume: bool = True,
@@ -146,8 +146,13 @@ def extract_stage(
     try:
         is_page = F.col("from_html").isNotNull()
         triples = extracted.where(~is_page).select("url", *_TRIPLE_COLS, "bucket")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        triples.write.mode("overwrite").partitionBy("bucket").parquet(triples_path)
+        # dynamic: the overwrite replaces only the buckets written here
+        (
+            triples.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(triples_path)
+        )
 
         # per-bucket KMV url sketch (<= _SKETCH_K hashes): lineage rows double
         # as mergeable cardinality summaries — corpus-level distinct-url
@@ -199,7 +204,7 @@ def extract_stage(
 def graph_stage(
     spark: SparkSession,
     out_dir: str,
-    n_buckets: int = 64,
+    n_buckets: int = g._N_BUCKETS,
     canonicalize: bool = True,
     min_support: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -247,7 +252,7 @@ def graph_stage(
 
     # canonical triples, computed once for both the nodes and the edges write
     tr = triples.select(*_TRIPLE_COLS).localCheckpoint()
-    nodes, edges = g.build_graph([schemas.local_frame(spark, [], schemas.NODE_RECORDS)], tr)
+    nodes, edges = g.build_graph([], tr)
     g.save_graph(nodes, edges, out_dir, n_buckets=n_buckets)
     return nodes, edges
 
@@ -271,7 +276,7 @@ def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     out_dir: str,
-    n_buckets: int = 64,
+    n_buckets: int = g._N_BUCKETS,
     run_id: str = "run-0",
     run_seq: int = 0,
     resume: bool = True,

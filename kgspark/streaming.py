@@ -17,8 +17,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgspark import schemas
-from kgspark.extract.html import with_extracted_text
+from kgspark.construct import graph as g
 from kgspark.extract.openie import extract_doc_triples
+
+
+def _each_page_batch(spark: SparkSession, input_dir, checkpoint_dir, trigger_once, process):
+    """File-source page stream -> ``process(batch_df, epoch_id)`` per
+    micro-batch (exactly-once with the checkpoint dir); ``trigger_once``
+    drains what is there (``availableNow``) and stops."""
+    writer = (
+        spark.readStream.schema(schemas.WEB_PAGES).parquet(input_dir)
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_extract_triples(
@@ -29,25 +43,17 @@ def stream_extract_triples(
     trigger_once: bool = True,
 ):
     """Continuous corpus -> triples: file-source stream, per-micro-batch
-    extraction via foreachBatch (exactly-once with the checkpoint dir;
-    idempotent append since doc triples are keyed by url)."""
-    pages = (
-        spark.readStream.schema(schemas.WEB_PAGES).parquet(input_dir)
-    )
+    fused HTML->text + OpenIE extraction via foreachBatch (exactly-once with
+    the checkpoint dir; idempotent append since doc triples are keyed by
+    url)."""
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        triples = extract_doc_triples(with_extracted_text(batch_df))
+        triples = extract_doc_triples(batch_df, fused_html=True)
         triples.withColumn("epoch", F.lit(epoch_id)).write.mode("append").parquet(
             f"{out_dir}/doc_triples_stream"
         )
 
-    writer = (
-        pages.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _each_page_batch(spark, input_dir, checkpoint_dir, trigger_once, process)
 
 
 def stream_update_graph(
@@ -55,7 +61,7 @@ def stream_update_graph(
     input_dir: str,
     graph_dir: str,
     checkpoint_dir: str,
-    n_buckets: int = 32,
+    n_buckets: int = g._N_BUCKETS,
     trigger_once: bool = True,
 ):
     """Continuous corpus -> LIVE graph: each micro-batch is extracted and
@@ -65,23 +71,12 @@ def stream_update_graph(
     graph size. Exactly-once per micro-batch via the stream checkpoint;
     the merge itself is idempotent (re-merging a batch is a no-op: LWW with
     identical values + distinct edges)."""
-    from kgspark.construct.graph import merge_into_graph
-
-    pages = spark.readStream.schema(schemas.WEB_PAGES).parquet(input_dir)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        triples = extract_doc_triples(with_extracted_text(batch_df)).select(
-            "subj", "subj_type", "pred", "obj", "obj_type"
-        )
-        merge_into_graph(spark, graph_dir, [], triples, n_buckets=n_buckets)
+        triples = extract_doc_triples(batch_df, fused_html=True).drop("url")
+        g.merge_into_graph(spark, graph_dir, [], triples, n_buckets=n_buckets)
 
-    writer = (
-        pages.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _each_page_batch(spark, input_dir, checkpoint_dir, trigger_once, process)
 
 
 def stream_first_seen_urls(
@@ -226,7 +221,7 @@ def stream_publish_graph(
     work_dir: str,
     publish_dir: str,
     checkpoint_dir: str,
-    n_buckets: int = 32,
+    n_buckets: int = g._N_BUCKETS,
     trigger_once: bool = True,
 ):
     """Continuous corpus -> ATOMICALLY VERSIONED graph: like
@@ -239,26 +234,15 @@ def stream_publish_graph(
     effectively-once visibility: a crash between merge and publish re-runs
     the (idempotent) merge and publishes once.
     """
-    from kgspark.construct.graph import merge_into_graph, publish_graph
-
-    pages = spark.readStream.schema(schemas.WEB_PAGES).parquet(input_dir)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        triples = extract_doc_triples(with_extracted_text(batch_df)).select(
-            "subj", "subj_type", "pred", "obj", "obj_type"
-        )
-        merge_into_graph(spark, work_dir, [], triples, n_buckets=n_buckets)
+        triples = extract_doc_triples(batch_df, fused_html=True).drop("url")
+        g.merge_into_graph(spark, work_dir, [], triples, n_buckets=n_buckets)
         nodes = spark.read.parquet(f"{work_dir}/nodes").drop("bucket")
         edges = spark.read.parquet(f"{work_dir}/edges").drop("bucket")
-        publish_graph(nodes, edges, publish_dir, n_buckets=n_buckets)
+        g.publish_graph(nodes, edges, publish_dir, n_buckets=n_buckets)
 
-    writer = (
-        pages.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _each_page_batch(spark, input_dir, checkpoint_dir, trigger_once, process)
 
 
 def stream_curate(

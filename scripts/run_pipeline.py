@@ -3,7 +3,7 @@
 
     spark-submit --py-files kgspark.zip scripts/run_pipeline.py \
         --input /path/to/web_pages_parquet --out /path/to/kg \
-        [--buckets 64] [--run-id r1] [--run-seq 0] [--no-resume]
+        [--buckets 32] [--run-id r1] [--run-seq 0] [--no-resume]
         [--warc]           # treat --input as a dir of WARC archives instead
         [--synthesize N]   # generate a deterministic corpus instead of reading
 
@@ -23,13 +23,15 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def main() -> None:
+    from kgspark.construct import graph
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="parquet dir with web_pages schema")
     ap.add_argument("--synthesize", type=int, help="generate an N-doc corpus instead")
     ap.add_argument("--warc", action="store_true", help="--input is a dir of WARC archives")
     ap.add_argument("--publish-dir", help="also commit the graph as an atomic snapshot here")
     ap.add_argument("--out", required=True)
-    ap.add_argument("--buckets", type=int, default=64)
+    ap.add_argument("--buckets", type=int, default=graph._N_BUCKETS)
     ap.add_argument("--run-id", default="run-0")
     ap.add_argument("--run-seq", type=int, default=0)
     ap.add_argument("--no-resume", action="store_true")
@@ -68,9 +70,7 @@ def main() -> None:
     edges = edges_df.count()
     version = None
     if args.publish_dir:
-        from kgspark.construct.graph import publish_graph
-
-        version = publish_graph(
+        version = graph.publish_graph(
             nodes_df.drop("bucket"), edges_df.drop("bucket"),
             args.publish_dir, n_buckets=args.buckets,
         )

@@ -53,7 +53,7 @@ def test_no_collect_outside_dimension_scale_allowlist():
     that drives data to the driver must justify itself in this table (VERDICT
     r04 finding 3: the old hand-pinned module list failed open)."""
     allowed = {
-        "construct/graph.py": "snapshot pointer + lineage rows (bounded)",
+        "construct/graph.py": "merge bucket probe: <= n_buckets rows",
         "extract/api.py": "user-facing .extract() result materialization",
         "extract/components.py": "CC convergence flag: 1-row aggregate",
         "extract/mentions.py": "alias dict broadcast: dictionary-scale",

@@ -92,13 +92,27 @@ def test_rerun_is_idempotent(spark, tmp_path):
     assert (r1.n_docs, r1.n_triples) == (r2.n_docs, r2.n_triples)
 
 
-def test_merge_into_graph_equals_full_rebuild(spark, tmp_path):
+def _sorted_parquet_files(root, key):
+    """True when every parquet file under ``root`` is sorted by ``key``."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(f"{root}/bucket=*/*.parquet")
+    ids = [pq.read_table(f, columns=[key]).column(key).to_pylist() for f in files]
+    return bool(files) and all(v == sorted(v) for v in ids)
+
+
+def test_merge_into_graph_equals_full_rebuild(spark, tmp_path, monkeypatch):
     """Incremental maintenance contract: save(batch1) + merge(batch2) must
     equal build(batch1 + batch2) bit-for-bit — including cross-batch
     last-write-wins, null-deletes-key, stubs, and edge dedup — while only
-    rewriting the buckets batch2 touches."""
-    from kgspark.construct import graph as g
+    rewriting the buckets batch2 touches, with one bucket-probe collect and
+    every merged bucket file still sorted by its key. Merging into an empty
+    directory must equal build + save of the batch alone."""
     from pyspark.sql import functions as F
+
+    from kgspark.construct import graph as g
 
     rec_schema = "label string, name string, props map<string,string>, seq long"
     tri_schema = "subj string, subj_type string, pred string, obj string, obj_type string"
@@ -135,8 +149,21 @@ def test_merge_into_graph_equals_full_rebuild(spark, tmp_path):
     out = str(tmp_path / "graph")
     nodes1, edges1 = g.build_graph([b1_records], b1_triples)
     g.save_graph(nodes1, edges1, out, n_buckets=8)
+    collects = []
+    frame_type = type(b2_triples)
+    collect = frame_type.collect
+
+    def counting(df):
+        collects.append(df)
+        return collect(df)
+
+    monkeypatch.setattr(frame_type, "collect", counting)
     report = g.merge_into_graph(spark, out, [b2_records], b2_triples, n_buckets=8)
+    monkeypatch.setattr(frame_type, "collect", collect)
+    assert len(collects) == 1
     assert 0 < report["affected_buckets"] <= 8
+    assert _sorted_parquet_files(f"{out}/nodes", "entity_id")
+    assert _sorted_parquet_files(f"{out}/edges", "src_id")
 
     got_nodes = {
         (r["label"], r["name"]): dict(r["props"])
@@ -160,6 +187,69 @@ def test_merge_into_graph_equals_full_rebuild(spark, tmp_path):
         spark.read.parquet(f"{out}/nodes"), spark.read.parquet(f"{out}/edges")
     )
     assert report2 == {"id_collisions": 0, "dup_keys": 0, "dangling_edges": 0}
+
+    # merging into nothing is building the batch alone
+    def read(path):
+        nodes = spark.read.parquet(f"{path}/nodes").collect()
+        edges = spark.read.parquet(f"{path}/edges").select("src_id", "rel", "dst_id").collect()
+        return {(r["label"], r["name"]): dict(r["props"]) for r in nodes}, set(map(tuple, edges))
+
+    fresh, built = str(tmp_path / "fresh"), str(tmp_path / "built")
+    g.merge_into_graph(spark, fresh, [b2_records], b2_triples, n_buckets=8)
+    g.save_graph(*g.build_graph([b2_records], b2_triples), built, n_buckets=8)
+    assert read(fresh) == read(built)
+    assert read(fresh)[0][("Disease", "糖尿病")] == {"icd": "E11.9"}
+
+
+def test_graph_rerun_leaves_no_stale_buckets(spark, tmp_path):
+    """A graph rewrite replaces every bucket, also after the extraction
+    stage's per-bucket overwrite: a rerun whose graph empties buckets leaves
+    none of the old rows on disk."""
+    out = str(tmp_path / "kg")
+    pipeline.run_pipeline(spark, fixtures.web_pages_spark_small(spark, 60), out, n_buckets=4)
+    assert _counts(spark, out)[1] > 0
+    _, edges = pipeline.graph_stage(spark, out, n_buckets=4, min_support=10**6)
+    assert edges.count() == 0
+    for table, key in (("nodes", "entity_id"), ("edges", "src_id")):
+        on_disk = spark.read.schema(f"{key} long").parquet(f"{out}/{table}")
+        assert on_disk.count() == 0, table
+
+
+def test_merge_with_other_bucket_count_raises(spark, tmp_path):
+    """A graph records its bucket count: merging with another count is
+    refused and leaves the graph as it was, point lookups read the count,
+    and every bucket-count default is the same."""
+    import inspect
+
+    from kgspark import streaming
+    from kgspark.construct import graph as g
+
+    rec_schema = "label string, name string, props map<string,string>, seq long"
+    tri_schema = "subj string, subj_type string, pred string, obj string, obj_type string"
+    recs = spark.createDataFrame(
+        [("Disease", f"病{i}", {"k": str(i)}, i) for i in range(20)], rec_schema
+    )
+    tri = spark.createDataFrame(
+        [(f"病{i}", "Disease", "HAS_SYMPTOM", "乏力", "Symptom") for i in range(20)], tri_schema
+    )
+    out = str(tmp_path / "graph")
+    g.save_graph(*g.build_graph([recs], tri), out, n_buckets=8)
+    with pytest.raises(ValueError):
+        g.merge_into_graph(spark, out, [recs], tri, n_buckets=4)
+    nodes = spark.read.parquet(f"{out}/nodes")
+    assert nodes.count() == 21
+    assert g.validate_graph(nodes, spark.read.parquet(f"{out}/edges"))["dup_keys"] == 0
+    assert [r["name"] for r in g.lookup_entity(spark, out, "Disease", "病7").collect()] == ["病7"]
+
+    defaults = {
+        inspect.signature(f).parameters["n_buckets"].default
+        for f in (
+            g.save_graph, g.merge_into_graph, g.publish_graph, g.save_graph_tables,
+            pipeline.run_pipeline, pipeline.extract_stage, pipeline.graph_stage,
+            streaming.stream_update_graph, streaming.stream_publish_graph,
+        )
+    }
+    assert defaults == {g._N_BUCKETS}
 
 
 def test_merge_into_graph_leaves_untouched_buckets_alone(spark, tmp_path):

@@ -207,7 +207,7 @@ def test_lookup_entity_prunes_partitions(spark, tmp_path, mini_sources):
     out = str(tmp_path / "g")
     save_graph(nodes, edges, out, n_buckets=8)
     any_name = nodes.filter("label = 'Disease'").select("name").first()["name"]
-    probe = lookup_entity(spark, out, "Disease", any_name, n_buckets=8)
+    probe = lookup_entity(spark, out, "Disease", any_name)
     rows = probe.collect()
     assert len(rows) == 1 and rows[0]["name"] == any_name
     plan = probe._jdf.queryExecution().executedPlan().toString()
