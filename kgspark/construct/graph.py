@@ -11,18 +11,20 @@ makes node identity stable across runs and partitionings. Collision risk at
 
 MERGE semantics replicated exactly (SURVEY §1.3):
 
-- last-write-wins props: ``SET n += row.props`` applied in write order ->
-  ``max_by(props, seq)`` per (label, name);
-- Neo4j ``+=`` *deletes* keys whose incoming value is null -> after picking
-  the winning record, ``map_filter`` drops null-valued entries;
+- per-key last-write-wins props: ``SET n += row.props`` applied in write
+  order -> each (label, name) folds its SET records in ``seq`` order;
+- Neo4j ``+=`` *deletes* keys whose incoming value is null -> after the
+  fold, null-valued winners are dropped;
 - stub nodes: MERGE on an edge tail creates a property-less node for unseen
   names (neo4j_loader.py:137-147) -> triple endpoints are unioned in as
-  records with ``props = NULL, seq = -1`` so any SET record outranks them.
+  records with ``props = NULL, seq = -1``, which carry nothing to fold.
 
-Both aggregates are two-phase hash aggregations (partial map-side combine
-before the shuffle), so hot keys (the reference data's 乏力-like symptom
-fan-in, SURVEY §4) collapse before they cross the wire; AQE skew-join splits
-cover the residual.
+Each graph table is one shuffle. Nodes are one ``groupBy(label, name)``
+collecting the SET records (two-phase ``ObjectHashAggregate``), or a hash-agg
+``distinct`` when a build has no SET records at all; edges are one
+``dropDuplicates``. Both combine map-side before the shuffle, so hot keys
+(the reference data's 乏力-like symptom fan-in, SURVEY §4, whose stub rows
+carry no props) collapse before they cross the wire.
 """
 
 from __future__ import annotations
@@ -37,12 +39,14 @@ from pathlib import Path
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kgspark import schemas
+
 
 # every graph table is laid out by ``bucket = _bucket(key, n)`` of its key
 # column; the count a graph was written with is kept in ``_BUCKETS`` beside
 # its tables (Spark's reader skips ``_`` files)
 _N_BUCKETS = 32
-_TABLES = (("nodes", "entity_id"), ("edges", "src_id"))
+_TABLES = (("nodes", "entity_id", schemas.NODES), ("edges", "src_id", schemas.EDGES))
 _EDGE_KEY = ["src_id", "rel", "dst_id"]
 
 
@@ -85,6 +89,11 @@ def stub_records_from_triples(triples: DataFrame) -> DataFrame:
     )
 
 
+def _node_rows(names: DataFrame, props) -> DataFrame:
+    eid = entity_id(F.col("label"), F.col("name"))
+    return names.select(eid.alias("entity_id"), "label", "name", props.alias("props"))
+
+
 def canonicalize_nodes(records: DataFrame) -> DataFrame:
     """A1: distinct (label, name) with per-key last-write-wins props.
 
@@ -94,54 +103,45 @@ def canonicalize_nodes(records: DataFrame) -> DataFrame:
     ``max_by(props, seq)`` is only equivalent when every SET carries every
     key — true of the reference loaders, but the property-based MERGE-replay
     test showed it wipes keys on partial updates, so the semantics here are
-    per-key.) Implementation: explode SET records to (key, value, seq)
-    entries, latest write per (label, name, key), drop null winners
-    (deletes), regroup with map_from_entries.
+    per-key.) Implementation: one ``groupBy(label, name)`` collects each
+    entity's SET records as (seq, entries); sorted by seq, they fold left to
+    right, each record replacing the entries whose keys it mentions; null
+    winners are dropped (deletes) and the rest become the map.
 
     Scale tiers: the corpus-sized stub stream (props NULL — triple endpoints
-    at 10^12-doc scale) only passes the two-phase hash-agg ``distinct``; the
-    entry explode/regroup touches SET records alone (dimension catalogs).
-    Stubs never outrank SET records structurally (they carry no entries).
+    at 10^12-doc scale) collects nothing, so its rows collapse in the
+    map-side partial aggregate and a hub entity's list holds only its SET
+    records (dimension catalogs, one seq-0 record per merge). One exchange:
+    no join and no second aggregate.
     """
-    all_names = records.select("label", "name").distinct()  # hash agg, corpus-scale
-    setters = records.filter(F.col("props").isNotNull())
-    entries = setters.select(
-        "label", "name", "seq", F.explode("props").alias("key", "value")
+    setter = F.when(
+        F.col("props").isNotNull(), F.struct("seq", F.map_entries("props").alias("entries"))
     )
-    latest = entries.groupBy("label", "name", "key").agg(
-        F.max_by("value", "seq").alias("value")
-    )
-    won = (
-        latest.filter(F.col("value").isNotNull())
-        .groupBy("label", "name")
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("key", "value"))).alias(
-                "props_raw"
-            )
-        )
-    )
-    empty_map = F.from_json(F.lit("{}"), "map<string,string>")
-    # join strategy left to AQE: it converts to broadcast at runtime when the
-    # SET-record side is small (always, in this engine's uses), but a forced
-    # hint would be wrong if a caller ever feeds corpus-scale SET records
-    return all_names.join(won, ["label", "name"], "left").select(
-        entity_id(F.col("label"), F.col("name")).alias("entity_id"),
-        "label",
-        "name",
-        F.coalesce("props_raw", empty_map).alias("props"),
+    grouped = records.groupBy("label", "name").agg(F.collect_list(setter).alias("setters"))
+    no_entries = F.array().cast("array<struct<key:string,value:string>>")
+
+    def apply(acc, rec):
+        keys = F.transform(rec["entries"], lambda e: e["key"])
+        kept = F.filter(acc, lambda e: ~F.array_contains(keys, e["key"]))
+        return F.concat(kept, rec["entries"])
+
+    folded = F.aggregate(F.array_sort("setters"), no_entries, apply)
+    won = F.filter(folded, lambda e: e["value"].isNotNull())
+    return _node_rows(grouped, F.map_from_entries(won))
+
+
+def _edge_ids(triples: DataFrame) -> DataFrame:
+    """J1: endpoint ids by hashing (projection, no join)."""
+    return triples.select(
+        entity_id(F.col("subj_type"), F.col("subj")).alias("src_id"),
+        F.col("pred").alias("rel"),
+        entity_id(F.col("obj_type"), F.col("obj")).alias("dst_id"),
     )
 
 
 def edges_from_triples(triples: DataFrame) -> DataFrame:
     """A2 + J1: endpoint ids by hashing (projection), then distinct edges."""
-    return (
-        triples.select(
-            entity_id(F.col("subj_type"), F.col("subj")).alias("src_id"),
-            F.col("pred").alias("rel"),
-            entity_id(F.col("obj_type"), F.col("obj")).alias("dst_id"),
-        )
-        .dropDuplicates(_EDGE_KEY)
-    )
+    return _edge_ids(triples).dropDuplicates(_EDGE_KEY)
 
 
 def edges_with_provenance(doc_triples: DataFrame, max_urls: int = 3) -> DataFrame:
@@ -173,13 +173,22 @@ def edges_with_provenance(doc_triples: DataFrame, max_urls: int = 3) -> DataFram
     return support.join(samples, key)
 
 
+def _graph_nodes(node_record_frames: list[DataFrame], triples: DataFrame) -> DataFrame:
+    stubs = stub_records_from_triples(triples)
+    if not node_record_frames:
+        # stubs alone: distinct names with no props (a hash-agg distinct,
+        # cheaper to plan and run than the fold, which would collect nothing)
+        no_props = F.from_json(F.lit("{}"), "map<string,string>")
+        return _node_rows(stubs.select("label", "name").distinct(), no_props)
+    return canonicalize_nodes(reduce(DataFrame.unionByName, node_record_frames, stubs))
+
+
 def build_graph(
     node_record_frames: list[DataFrame], triples: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """U1 + A1 + A2: union all sources' MERGE records (none is fine) with
     edge-endpoint stubs, canonicalize, and materialize distinct edges."""
-    records = reduce(DataFrame.unionByName, node_record_frames, stub_records_from_triples(triples))
-    return canonicalize_nodes(records), edges_from_triples(triples)
+    return _graph_nodes(node_record_frames, triples), edges_from_triples(triples)
 
 
 def _bucket(entity, n_buckets: int):
@@ -210,14 +219,14 @@ def _write_graph(
     """
     staged = Path(out_dir, "_staged")
     shutil.rmtree(staged, ignore_errors=True)
-    for (table, key), df in zip(_TABLES, (nodes, edges)):
+    for (table, key, _), df in zip(_TABLES, (nodes, edges)):
         (
             df.withColumn("bucket", _bucket(F.col(key), n_buckets))
             .sortWithinPartitions("bucket", key)
             .write.partitionBy("bucket")
             .parquet(str(staged / table))
         )
-    for table, _ in _TABLES:
+    for table, _, _ in _TABLES:
         live, new = Path(out_dir, table), staged / table
         if buckets is None:
             shutil.rmtree(live, ignore_errors=True)
@@ -243,6 +252,17 @@ def save_graph(
     _write_graph(nodes, edges, out_dir, n_buckets)
 
 
+def read_graph(spark, out_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The (nodes, edges) tables under ``out_dir``, ``bucket`` column
+    included, read with their declared schemas (``schemas.NODES`` /
+    ``schemas.EDGES``): no footer-inference job, and a graph saved empty
+    reads as two empty frames."""
+    nodes, edges = (
+        spark.read.schema(schema).parquet(f"{out_dir}/{table}") for table, _, schema in _TABLES
+    )
+    return nodes, edges
+
+
 def lookup_entity(spark, out_dir: str, label: str, name: str) -> DataFrame:
     """Point lookup against the saved layout, O(1/buckets) of the table:
     identity is a hash, never a dictionary join, so the entity id and its
@@ -251,7 +271,7 @@ def lookup_entity(spark, out_dir: str, label: str, name: str) -> DataFrame:
     an id predicate that prunes parquet row groups via the sorted write's
     min/max stats."""
     eid = entity_id(F.lit(label), F.lit(name))
-    return spark.read.parquet(f"{out_dir}/nodes").filter(
+    return read_graph(spark, out_dir)[0].filter(
         (F.col("bucket") == _bucket(eid, _graph_buckets(out_dir))) & (F.col("entity_id") == eid)
     )
 
@@ -271,10 +291,10 @@ def merge_into_graph(
     over new data MERGEs into the live graph. The merge is ``build_graph``
     over the touched buckets' existing nodes as seq-0 records and the batch's
     records shifted to seq>=1 (last-write-wins continues across batches,
-    stubs never wipe props), plus their existing edges (edges union
-    distinct). An edge's bucket is its source's, and every source is a stub
-    of the batch, so one probe of the batch's entity buckets serves both
-    tables.
+    stubs never wipe props), plus their existing edges: the batch's edge ids
+    and the old edges are deduplicated together, once. An edge's bucket is
+    its source's, and every source is a stub of the batch, so one probe of
+    the batch's entity buckets serves both tables.
 
     Cost model at 100 TB: a batch touching K of N buckets reads and rewrites
     K/N of the node/edge tables; the untouched partitions are never scanned
@@ -308,13 +328,12 @@ def merge_into_graph(
     old_records, old_edges = [], []
     if written is not None:
         old_nodes, old_edge_rows = (
-            spark.read.parquet(f"{out_dir}/{table}").filter(F.col("bucket").isin(touched))
-            for table, _ in _TABLES
+            t.filter(F.col("bucket").isin(touched)) for t in read_graph(spark, out_dir)
         )
         old_records = [old_nodes.select("label", "name", "props", F.lit(0).cast("long").alias("seq"))]
         old_edges = [old_edge_rows.select(*_EDGE_KEY)]
-    nodes, edges = build_graph(old_records + records, triples)
-    edges = reduce(DataFrame.unionByName, old_edges, edges).dropDuplicates(_EDGE_KEY)
+    nodes = _graph_nodes(old_records + records, triples)
+    edges = reduce(DataFrame.unionByName, old_edges, _edge_ids(triples)).dropDuplicates(_EDGE_KEY)
     _write_graph(nodes, edges, out_dir, n_buckets, buckets=touched)
     return {"affected_buckets": len(touched), "n_buckets": n_buckets}
 
@@ -330,11 +349,9 @@ def compact_graph(spark, out_dir: str) -> dict:
     itself is the repartition key, so compaction is one shuffle whose output
     co-locates exactly with the existing layout. Returns rows per table.
     """
-    nodes, edges = (
-        spark.read.parquet(f"{out_dir}/{table}").repartition("bucket") for table, _ in _TABLES
-    )
+    nodes, edges = (t.repartition("bucket") for t in read_graph(spark, out_dir))
     _write_graph(nodes, edges, out_dir, _graph_buckets(out_dir))
-    return {table: spark.read.parquet(f"{out_dir}/{table}").count() for table, _ in _TABLES}
+    return {table: t.count() for (table, _, _), t in zip(_TABLES, read_graph(spark, out_dir))}
 
 
 def export_for_neo4j(nodes: DataFrame, edges: DataFrame, out_dir: str) -> None:
@@ -541,8 +558,7 @@ def load_graph(
     v = version if version is not None else current_graph_version(out_dir)
     if v is None:
         raise FileNotFoundError(f"no committed graph under {out_dir}")
-    base = f"{out_dir}/v{v}"
-    return spark.read.parquet(f"{base}/nodes"), spark.read.parquet(f"{base}/edges")
+    return read_graph(spark, f"{out_dir}/v{v}")
 
 
 def vacuum_graph(out_dir: str, keep: int = 2) -> list[int]:

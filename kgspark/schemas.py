@@ -93,6 +93,28 @@ NODE_RECORDS = T.StructType(
     ]
 )
 
+# the graph tables as ``construct.graph.save_graph`` lays them out: ``bucket``
+# is the partition column. Reading with these runs no schema-inference job,
+# and a graph saved empty (no parquet files) reads as an empty table.
+NODES = T.StructType(
+    [
+        T.StructField("entity_id", T.LongType(), False),
+        T.StructField("label", T.StringType(), False),
+        T.StructField("name", T.StringType(), False),
+        T.StructField("props", T.MapType(T.StringType(), T.StringType()), True),
+        T.StructField("bucket", T.IntegerType(), False),
+    ]
+)
+
+EDGES = T.StructType(
+    [
+        T.StructField("src_id", T.LongType(), False),
+        T.StructField("rel", T.StringType(), False),
+        T.StructField("dst_id", T.LongType(), False),
+        T.StructField("bucket", T.IntegerType(), False),
+    ]
+)
+
 LINEAGE = T.StructType(
     [
         T.StructField("bucket", T.IntegerType(), False),

@@ -238,8 +238,7 @@ def stream_publish_graph(
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         triples = extract_doc_triples(batch_df, fused_html=True).drop("url")
         g.merge_into_graph(spark, work_dir, [], triples, n_buckets=n_buckets)
-        nodes = spark.read.parquet(f"{work_dir}/nodes").drop("bucket")
-        edges = spark.read.parquet(f"{work_dir}/edges").drop("bucket")
+        nodes, edges = (t.drop("bucket") for t in g.read_graph(spark, work_dir))
         g.publish_graph(nodes, edges, publish_dir, n_buckets=n_buckets)
 
     return _each_page_batch(spark, input_dir, checkpoint_dir, trigger_once, process)

@@ -55,9 +55,19 @@ def main() -> None:
     nodes, edges = build_tpch_graph(spark, SF)
     sections.append((
         "KG construction (rules -> canonicalize -> edges) + name resolution",
-        "Look for: xxhash64 projections instead of dictionary joins; hash-agg distinct for "
-        "the corpus tier; SortAggregate confined to the max_by(props) setter tier; AQE join.",
+        "Look for: xxhash64 projections instead of dictionary joins; name resolution reads "
+        "no props, so Catalyst prunes the props fold and each node side is a hash-agg "
+        "distinct; AQE join.",
         plan_of(triples_with_names(nodes, edges)),
+    ))
+    sections.append((
+        "Node canonicalization (kgspark.construct.graph.canonicalize_nodes)",
+        "Look for: ONE Exchange hashpartitioning(label, name) between a partial and a final "
+        "ObjectHashAggregate (collect_list of the SET records, folded per entity) over the "
+        "record Union; no SortAggregate and no join above the Union (the broadcast joins "
+        "below it are build_tpch_graph's key lookups). A build with no SET records plans a "
+        "hash-agg distinct instead.",
+        plan_of(nodes),
     ))
 
     pages = fixtures.web_pages_df(spark, 1000)

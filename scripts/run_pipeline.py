@@ -64,8 +64,7 @@ def main() -> None:
         resume=not args.no_resume,
         canonicalize=not args.no_canonicalize,
     )
-    nodes_df = spark.read.parquet(f"{args.out}/nodes")
-    edges_df = spark.read.parquet(f"{args.out}/edges")
+    nodes_df, edges_df = graph.read_graph(spark, args.out)
     nodes = nodes_df.count()
     edges = edges_df.count()
     version = None

@@ -107,9 +107,11 @@ def test_merge_into_graph_equals_full_rebuild(spark, tmp_path, monkeypatch):
     """Incremental maintenance contract: save(batch1) + merge(batch2) must
     equal build(batch1 + batch2) bit-for-bit — including cross-batch
     last-write-wins, null-deletes-key, stubs, and edge dedup — while only
-    rewriting the buckets batch2 touches, with one bucket-probe collect and
-    every merged bucket file still sorted by its key. Merging into an empty
-    directory must equal build + save of the batch alone."""
+    rewriting the buckets batch2 touches, with one bucket-probe collect, at
+    most 6 Spark jobs (probe, nodes and edges: one shuffle each) and every
+    merged bucket file still sorted by its key. Merging into an empty
+    directory, or into a graph that was saved empty, must equal build + save
+    of the batch alone."""
     from pyspark.sql import functions as F
 
     from kgspark.construct import graph as g
@@ -158,9 +160,15 @@ def test_merge_into_graph_equals_full_rebuild(spark, tmp_path, monkeypatch):
         return collect(df)
 
     monkeypatch.setattr(frame_type, "collect", counting)
-    report = g.merge_into_graph(spark, out, [b2_records], b2_triples, n_buckets=8)
+    sc = spark.sparkContext
+    sc.setJobGroup("test_merge_into_graph", "merge")
+    try:
+        report = g.merge_into_graph(spark, out, [b2_records], b2_triples, n_buckets=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     monkeypatch.setattr(frame_type, "collect", collect)
     assert len(collects) == 1
+    assert len(sc.statusTracker().getJobIdsForGroup("test_merge_into_graph")) <= 6
     assert 0 < report["affected_buckets"] <= 8
     assert _sorted_parquet_files(f"{out}/nodes", "entity_id")
     assert _sorted_parquet_files(f"{out}/edges", "src_id")
@@ -194,10 +202,12 @@ def test_merge_into_graph_equals_full_rebuild(spark, tmp_path, monkeypatch):
         edges = spark.read.parquet(f"{path}/edges").select("src_id", "rel", "dst_id").collect()
         return {(r["label"], r["name"]): dict(r["props"]) for r in nodes}, set(map(tuple, edges))
 
-    fresh, built = str(tmp_path / "fresh"), str(tmp_path / "built")
-    g.merge_into_graph(spark, fresh, [b2_records], b2_triples, n_buckets=8)
+    fresh, saved_empty, built = (str(tmp_path / d) for d in ("fresh", "saved_empty", "built"))
+    g.save_graph(*g.build_graph([], b2_triples.limit(0)), saved_empty, n_buckets=8)
     g.save_graph(*g.build_graph([b2_records], b2_triples), built, n_buckets=8)
-    assert read(fresh) == read(built)
+    for target in (fresh, saved_empty):
+        g.merge_into_graph(spark, target, [b2_records], b2_triples, n_buckets=8)
+        assert read(target) == read(built), target
     assert read(fresh)[0][("Disease", "糖尿病")] == {"icd": "E11.9"}
 
 

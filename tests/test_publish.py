@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from kgspark import schemas
 from kgspark.construct.graph import (
     current_graph_version,
     graph_versions,
@@ -37,6 +38,12 @@ def test_publish_load_time_travel(spark, tmp_path):
     assert {r["name"] for r in nodes.collect()} == {f"b-{i}" for i in range(5)}
     old, _ = load_graph(spark, out, version=1)  # time travel
     assert {r["name"] for r in old.collect()} == {f"a-{i}" for i in range(5)}
+    # a graph published empty loads as two empty frames of the graph schemas
+    empty = [df.limit(0) for df in (n1, e1)]
+    assert publish_graph(*empty, out, n_buckets=2) == 3
+    nodes, edges = load_graph(spark, out)
+    assert (nodes.count(), edges.count()) == (0, 0)
+    assert (nodes.columns, edges.columns) == (schemas.NODES.names, schemas.EDGES.names)
 
 
 def test_failed_publish_invisible_and_vacuumed(spark, tmp_path):
