@@ -1750,11 +1750,11 @@ WITH raw AS (
   FROM documents
 ),
 wmax AS (
-  SELECT max(CASE WHEN NOT isnan(w) AND w > 0 THEN w END) AS m FROM raw
+  SELECT max(CASE WHEN NOT isnan(w) AND w > 0 AND NOT isinf(w) THEN w END) AS m FROM raw
 ),
 keyed AS (
   SELECT doc_id, lang,
-         CASE WHEN w IS NOT NULL AND NOT isnan(w) AND w > 0 THEN
+         CASE WHEN w IS NOT NULL AND NOT isnan(w) AND w > 0 AND NOT isinf(w) THEN
            CAST(round(ln((CAST(({expansion}) % 1000000000000 AS DOUBLE) + 0.5)
                          / 1000000000000.0)
                       / greatest(w / (SELECT m FROM wmax), 1.0e-8)

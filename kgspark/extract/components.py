@@ -7,28 +7,31 @@ produce an alias-similarity edge list (surface form <-> normalized key);
 connected components over that edge list merge transitive chains of surface
 forms; the canonical name per component is the shortest original form.
 
-Connected components = iterative min-id label propagation, pure DataFrame
-joins (no GraphFrames dependency):
+Connected components has one path per input size:
 
-    comp(v) <- min(comp(v), min_{u~v} comp(u))   until fixpoint
+- below ``local_threshold`` edges, a driver-side union-find over the
+  collected edge list. This is the standard endgame of distributed CC
+  (GraphX/GraphFrames likewise finish small frontiers locally): an
+  alias-similarity edge list is *dictionary*-scale (~10^6-10^8 forms for
+  10^12 docs), each edge is two longs, and one union-find pass beats 5-10
+  shuffle rounds by an order of magnitude wall clock;
+- above it, iterative min-id label propagation, pure DataFrame joins (no
+  GraphFrames dependency)::
 
-Scale notes:
+      comp(v) <- min(comp(v), min_{u~v} comp(u))   until fixpoint
+
+Propagation scale notes:
 - each iteration is one shuffle on the edge list + one aggregate; iterations
   are bounded by the graph diameter — alias graphs are star-like (diameter
-  ~2-4), so 5-10 iterations suffice; ``max_iter`` guards pathological chains;
+  ~2-4), so 5-10 iterations suffice; a graph that has not reached its
+  fixpoint after ``max_iter`` rounds raises instead of returning partial
+  labels;
 - hot keys (a normalized key shared by millions of forms) are exactly the
   AQE skew-join case — skewJoin is enabled in the session factory; the
   aggregate side is two-phase (map-side partial min) so fan-in collapses
   before the shuffle;
 - ``localCheckpoint`` every iteration cuts the exponentially growing lineage
-  (the classic iterative-join pitfall);
-- below ``local_threshold`` edges the component labeling collapses to a
-  driver-side union-find over the collected edge list. This is the standard
-  endgame of distributed CC (GraphX/GraphFrames likewise finish small
-  frontiers locally): an alias-similarity edge list is *dictionary*-scale
-  (~10^6-10^8 forms for 10^12 docs), each edge is two longs, and one
-  union-find pass beats 5-10 shuffle rounds by an order of magnitude wall
-  clock. Inputs above the threshold take the iterative join path unchanged.
+  (the classic iterative-join pitfall).
 """
 
 from __future__ import annotations
@@ -85,30 +88,16 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 15,
     local_threshold: int = _CC_LOCAL_THRESHOLD,
-    method: str = "propagation",
-    stats: dict | None = None,
 ) -> DataFrame:
     """(src, dst) long-id edge list -> (id, component) with component = min
-    node id in the component. Convergence-checked each iteration; edge lists
-    under ``local_threshold`` run as a driver union-find (see module doc).
+    node id in the component.
 
-    ``method``:
-    - "propagation" (default): min-label propagation, one shuffle + one
-      aggregate per round, O(graph diameter) rounds. Right for the shallow
-      star-like alias graphs canonicalization produces (diameter 2-4).
-    - "star": alternating large-star/small-star contraction (Kiveris et al.,
-      "Connected Components in MapReduce and Beyond"), O(log n) rounds
-      regardless of diameter. Right for chain-heavy graphs — near-dup
-      cluster graphs are chains of pairwise-similar documents, where
-      propagation would need O(chain length) rounds.
-
-    ``stats``: pass a dict to receive {"iterations": k, "method": ...}.
+    Edge lists under ``local_threshold`` run as a driver union-find (see
+    module doc); larger ones run min-label propagation, one shuffle + one
+    aggregate per round, O(graph diameter) rounds. Propagation that has not
+    reached its fixpoint after ``max_iter`` rounds raises ``RuntimeError``:
+    partial labels would silently split components.
     """
-    if method not in ("propagation", "star"):
-        # validate before the local-threshold branch: a typo must fail fast,
-        # not silently run the driver union-find on small inputs and only
-        # raise at scale
-        raise ValueError(f"method must be 'propagation' or 'star', got {method!r}")
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
     # materialize the edge list once (by its first action): every iteration
@@ -117,20 +106,14 @@ def connected_components(
     sym = sym.localCheckpoint(eager=False)
     if local_threshold and sym.count() <= local_threshold:
         pairs = [(r["a"], r["b"]) for r in sym.collect()]
-        if stats is not None:
-            stats.update({"iterations": 0, "method": "local-union-find"})
         return _local_components(edges.sparkSession, pairs)
-    if method == "star":
-        return _cc_star(sym, max_iter, stats)
     comp = (
         sym.select(F.col("a").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
         .localCheckpoint()
     )
-    iters = 0
     for _ in range(max_iter):
-        iters += 1
         # candidate component per node = min over neighbors' components
         nbr_min = (
             sym.join(comp.withColumnRenamed("id", "b"), "b")
@@ -151,95 +134,10 @@ def connected_components(
         n_changed = new_comp.filter(F.col("changed")).count()
         comp = new_comp.drop("changed")
         if n_changed == 0:
-            break
-    if stats is not None:
-        stats.update({"iterations": iters, "method": "propagation"})
-    return comp
-
-
-def _cc_star(sym: DataFrame, max_iter: int, stats: dict | None) -> DataFrame:
-    """Alternating large-star / small-star contraction over a symmetric edge
-    list. Each round rewires edges toward per-neighborhood minima, halving
-    component 'height'; at fixpoint the edge set is a union of stars whose
-    centers are the component minima. O(log n) rounds on any topology —
-    a path of length 2^k labels in ~k rounds where propagation needs 2^k.
-
-    All steps are the engine's standard shapes: groupBy-min aggregates +
-    equi-joins, canonical (a<b) pair dedup between rounds, localCheckpoint
-    per round to cut lineage. Convergence is detected with an
-    order-independent signature aggregate (count + sum of pair hashes) —
-    one tiny job per round, no driver-side edge materialization.
-    """
-    all_nodes = sym.select(F.col("a").alias("id")).distinct().localCheckpoint()
-
-    # canonical undirected pairs a<b
-    pairs = (
-        sym.filter(F.col("a") < F.col("b")).distinct().localCheckpoint()
-    )
-
-    def signature(p: DataFrame) -> tuple:
-        # bit_xor: order-independent and overflow-free under ANSI arithmetic
-        # (pairs are distinct, so xor is a faithful set fingerprint)
-        row = p.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(a, b))"), F.lit(0)).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    sig = signature(pairs)
-    iters = 0
-    converged = False
-    for _ in range(max_iter):
-        iters += 1
-        both = pairs.union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        # large-star: every neighbor v > u re-attaches to min(N(u) ∪ {u})
-        mins = both.groupBy("a").agg(F.min("b").alias("mn"))
-        m = F.least(F.col("mn"), F.col("a"))
-        large = (
-            both.filter(F.col("b") > F.col("a"))
-            .join(mins, "a")
-            .select(F.least(F.col("b"), m).alias("a"), F.greatest(F.col("b"), m).alias("b"))
-            .filter(F.col("a") < F.col("b"))
-            .distinct()
-        )
-        # small-star: u and every neighbor v < u re-attach to the minimum
-        lower = large.union(
-            large.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).filter(F.col("b") < F.col("a"))
-        smins = lower.groupBy("a").agg(F.min("b").alias("mn"))
-        attached = lower.join(smins, "a")
-        small = (
-            attached.select(F.col("mn").alias("a"), F.col("a").alias("b"))
-            .union(
-                attached.filter(F.col("b") != F.col("mn")).select(
-                    F.col("mn").alias("a"), F.col("b").alias("b")
-                )
-            )
-            .filter(F.col("a") < F.col("b"))
-            .distinct()
-            .localCheckpoint()
-        )
-        new_sig = signature(small)
-        pairs = small
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-    if stats is not None:
-        stats.update({"iterations": iters, "method": "star", "converged": converged})
-    if not converged:
-        # at signature fixpoint the edge set is a union of stars; if max_iter
-        # cut the loop short it may not be, and the min-per-neighborhood
-        # labeling below would be silently, arbitrarily wrong — worse than
-        # propagation's partially-converged labels. Fail loudly instead.
-        raise RuntimeError(
-            f"star contraction did not converge in max_iter={max_iter} rounds; "
-            "re-run with a larger max_iter (rounds needed ~ log2(n))"
-        )
-    # fixpoint edge set is a union of stars: center = component min
-    leaf_label = pairs.groupBy(F.col("b").alias("id")).agg(F.min("a").alias("center"))
-    return all_nodes.join(leaf_label, "id", "left").select(
-        "id", F.coalesce("center", F.col("id")).alias("component")
+            return comp
+    raise RuntimeError(
+        f"label propagation did not converge in max_iter={max_iter} rounds; "
+        "re-run with a larger max_iter (rounds needed ~ graph diameter)"
     )
 
 
@@ -263,7 +161,7 @@ def normalized_forms(col):
     return F.array_distinct(F.array(base, no_sev, no_paren, lowered))
 
 
-def canonical_surface_forms(names: DataFrame, name_col: str = "name") -> DataFrame:
+def canonical_surface_forms(names: DataFrame) -> DataFrame:
     """(label, name) -> (label, name, canonical) within each label.
 
     Blocking + CC: normalization variants generate the edge list (name <->
@@ -271,7 +169,7 @@ def canonical_surface_forms(names: DataFrame, name_col: str = "name") -> DataFra
     components merge transitive chains; canonical = shortest original form
     (ties broken lexicographically) in the component.
     """
-    base = names.select("label", F.col(name_col).alias("name")).distinct()
+    base = names.select("label", "name").distinct()
     variants = base.select(
         "label", "name", F.explode(normalized_forms(F.col("name"))).alias("variant")
     )
@@ -291,13 +189,13 @@ def canonical_surface_forms(names: DataFrame, name_col: str = "name") -> DataFra
     return labeled.select("label", "name", winner["name"].alias("canonical"))
 
 
-def apply_canonicalization(
-    triples: DataFrame, mapping: DataFrame, types: tuple[str, ...] = ("Disease",)
-) -> DataFrame:
+def apply_canonicalization(triples: DataFrame, mapping: DataFrame) -> DataFrame:
     """Rewrite subj/obj of extracted triples to canonical surface forms.
 
-    ``mapping``: (label, name, canonical). Broadcast joins — the mapping is
-    entity-dictionary-sized, the triples are corpus-sized.
+    ``mapping``: (label, name, canonical). A row rewrites only the subj/obj
+    whose (type, name) equals its (label, name), so the caller chooses what
+    gets canonicalized by the labels it maps. Broadcast joins — the mapping
+    is entity-dictionary-sized, the triples are corpus-sized.
     """
     m = F.broadcast(mapping)
     subj_m = m.select(
@@ -313,20 +211,8 @@ def apply_canonicalization(
     out = (
         triples.join(subj_m, ["subj_type", "subj"], "left")
         .join(obj_m, ["obj_type", "obj"], "left")
-        .withColumn(
-            "subj",
-            F.when(
-                F.col("subj_type").isin(*types) & F.col("subj_canon").isNotNull(),
-                F.col("subj_canon"),
-            ).otherwise(F.col("subj")),
-        )
-        .withColumn(
-            "obj",
-            F.when(
-                F.col("obj_type").isin(*types) & F.col("obj_canon").isNotNull(),
-                F.col("obj_canon"),
-            ).otherwise(F.col("obj")),
-        )
+        .withColumn("subj", F.coalesce("subj_canon", "subj"))
+        .withColumn("obj", F.coalesce("obj_canon", "obj"))
     )
     return out.drop("subj_canon", "obj_canon")
 

@@ -1277,17 +1277,18 @@ def crawl_waves(
     budget) — hosts do not block each other, so a single giant host
     lengthens the plan's tail without inflating any shuffle.
 
-    The frontier must not already carry ``host``/``slot``/``wave``
-    columns (raises ValueError rather than emitting duplicate names that
-    break downstream selects ambiguously) — rename or drop yours first.
+    The frontier must not already carry ``host``/``slot``/``wave`` columns,
+    nor ``_rk`` (the internal within-host rank column); it raises
+    ValueError rather than emitting duplicate names that break downstream
+    selects ambiguously — rename or drop yours first.
     """
     if per_host_per_wave < 1:
         raise ValueError(f"per_host_per_wave must be >= 1, got {per_host_per_wave}")
     clash = {"host", "slot", "wave", "_rk"} & set(frontier.columns)
     if clash:
         raise ValueError(
-            f"crawl_waves appends host/slot/wave; frontier already has {sorted(clash)} "
-            "— rename or drop them first"
+            "crawl_waves appends host/slot/wave and uses _rk internally; frontier "
+            f"already has {sorted(clash)} — rename or drop them first"
         )
     h = F.md5(F.concat(F.col(url_col).cast("string"), F.lit(f"|{salt}")))
     order = (

@@ -91,8 +91,8 @@ def weighted_sample_keys(
     ordering exactly. Residual ties break by id downstream.
 
     Returns the input plus ``wsample_key`` (bigint, HIGHER = more likely
-    selected). Rows with NULL, NaN, or non-positive weight get a NULL
-    key — filter or assert upstream; silently ranking them would be a
+    selected). Rows with NULL, NaN, infinite or non-positive weight get a
+    NULL key — filter or assert upstream; silently ranking them would be a
     correctness trap (NaN comparisons are treacherous: ``NaN > 0`` is
     true in Spark). Pathological weight RATIOS are floored: w/wmax
     saturates at 1e-8 (below that the division can underflow to 0 —
@@ -122,7 +122,7 @@ def weighted_sample_keys(
     udenom = 1_000_000_000_000
     u = (F.pmod(h, F.lit(udenom)).cast("double") + F.lit(0.5)) / F.lit(float(udenom))
     w = F.col(weight_col).cast("double")
-    valid = w.isNotNull() & ~F.isnan(w) & (w > 0)
+    valid = w.isNotNull() & ~F.isnan(w) & (w > 0) & (w < F.lit(float("inf")))
     wmax = df.select(
         F.max(F.when(valid, w)).alias("_wmax")
     )

@@ -248,7 +248,7 @@ def graph_stage(
         mapping = schemas.local_frame(
             spark, [r.asDict() for r in mapping.collect()], mapping.schema
         )
-        triples = components.apply_canonicalization(triples, mapping, types=("Disease",))
+        triples = components.apply_canonicalization(triples, mapping)
 
     # canonical triples, computed once for both the nodes and the edges write
     tr = triples.select(*_TRIPLE_COLS).localCheckpoint()
@@ -312,7 +312,7 @@ def corpus_url_cardinality(spark: SparkSession, out_dir: str, k: int = _SKETCH_K
     property; it is correct for arbitrary overlap (ops/sketch.py)."""
     from kgspark.ops.sketch import kmv_estimate, kmv_merge
 
-    lin = spark.read.option("mergeSchema", "true").parquet(f"{out_dir}/lineage")
+    lin = spark.read.schema(schemas.LINEAGE).parquet(f"{out_dir}/lineage")
     latest = (
         lin.groupBy("bucket")
         .agg(F.max_by(F.col("url_sketch"), F.col("run_seq")).alias("sketch"))

@@ -1,7 +1,12 @@
 #!/usr/bin/env python
 """Regenerate PLANS.md: formatted physical plans of the headline operators,
 so plan-level claims (pushdown, broadcast, two-phase aggs, fused Python
-stage) are inspectable without running anything."""
+stage) are inspectable without running anything.
+
+Run from the repository root: ``python scripts/dump_plans.py``. Only the
+``## `` sections this script generates are replaced (matched by title); every
+other section of PLANS.md is kept byte-for-byte, and a generated section the
+file lacks is appended."""
 
 from __future__ import annotations
 
@@ -14,12 +19,52 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF = "/root/testdata/sf0.001"
 
+_HEADER = """# PLANS — physical plans of the headline operators
+
+Generated by `python scripts/dump_plans.py` (sf0.001, local[4], AQE on).
+"""
+
 
 def plan_of(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def _split_sections(doc: str) -> list[str]:
+    """``doc`` cut before every ``## `` heading outside a code fence: the
+    preamble first, then one chunk per section, joining back to ``doc``."""
+    chunks, cur, fenced = [], [], False
+    for line in doc.splitlines(keepends=True):
+        if line.startswith("```"):
+            fenced = not fenced
+        elif line.startswith("## ") and not fenced:
+            chunks.append("".join(cur))
+            cur = []
+        cur.append(line)
+    chunks.append("".join(cur))
+    return chunks
+
+
+def splice_sections(doc: str, sections: list[tuple[str, str, str]]) -> str:
+    """Replace the sections of ``doc`` whose ``## `` title matches a
+    generated (title, note, plan) section, keeping each replaced chunk's
+    trailing blank lines; append generated sections ``doc`` lacks."""
+    fresh = {
+        title: f"## {title}\n\n{note}\n\n```\n{plan.rstrip()}\n```\n"
+        for title, note, plan in sections
+    }
+    chunks = _split_sections(doc)
+    out = [chunks[0]]
+    for chunk in chunks[1:]:
+        title = chunk.splitlines()[0][3:].strip()
+        if title in fresh:
+            body = chunk.rstrip("\n")
+            chunk = fresh.pop(title) + chunk[len(body) + 1:]
+        out.append(chunk)
+    out += ["\n" + text for text in fresh.values()]
+    return "".join(out)
 
 
 def main() -> None:
@@ -221,14 +266,10 @@ def main() -> None:
         plan_of(rs),
     ))
 
-    out = ["# PLANS — physical plans of the headline operators",
-           "",
-           "Generated by `python scripts/dump_plans.py` (sf0.001, local[4], AQE on).",
-           ""]
-    for title, note, plan in sections:
-        out += [f"## {title}", "", note, "", "```", plan.rstrip(), "```", ""]
-    Path("PLANS.md").write_text("\n".join(out))
-    print("wrote PLANS.md")
+    path = Path("PLANS.md")
+    doc = path.read_text(encoding="utf-8") if path.exists() else _HEADER
+    path.write_text(splice_sections(doc, sections), encoding="utf-8")
+    print(f"replaced {len(sections)} sections of PLANS.md")
     spark.stop()
 
 

@@ -60,6 +60,7 @@ def test_partitioning_invariant_and_salt_redraw(spark, frontier):
 
 
 def test_reserved_column_collision_raises(spark, frontier):
-    for col in ("host", "slot", "wave"):
-        with pytest.raises(ValueError, match="rename or drop"):
+    for col in ("host", "slot", "wave", "_rk"):
+        with pytest.raises(ValueError, match="rename or drop") as err:
             crawl_waves(frontier.withColumn(col, frontier.prio))
+        assert col in str(err.value).split(";")[0]  # the reserved name is explained

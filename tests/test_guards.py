@@ -55,7 +55,7 @@ def test_no_collect_outside_dimension_scale_allowlist():
     allowed = {
         "construct/graph.py": "merge bucket probe: <= n_buckets rows",
         "extract/api.py": "user-facing .extract() result materialization",
-        "extract/components.py": "CC convergence flag: 1-row aggregate",
+        "extract/components.py": "union-find endgame edge list: <= _CC_LOCAL_THRESHOLD rows",
         "extract/mentions.py": "alias dict broadcast: dictionary-scale",
         "ops/asof.py": "broadcast tier is row-count guarded",
         "ops/bpe.py": "driver-local merge loop gated by max_local_vocab",

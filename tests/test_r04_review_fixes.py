@@ -209,6 +209,35 @@ def test_weighted_sample_null_and_nonpositive_weights(spark):
     assert picked == {1}  # only the positive-weight row is ever sampled
 
 
+def test_weighted_sample_infinite_weight_gets_null_key(spark):
+    """+inf is not a weight: it must get a NULL key in Spark and in the
+    DuckDB oracle, not a NaN that fails the bigint cast, and must not
+    become the normalizing max of the finite rows."""
+    import duckdb
+
+    import __spark_entry__ as entry
+    from kgspark.ops.sample import weighted_sample_keys
+
+    finite = [(1, "en", 5.0), (2, "en", 2.0)]
+    rows = finite + [(3, "en", float("inf"))]
+    schema = "doc_id long, lang string, n_chars double"
+
+    def spark_keys(data):
+        df = spark.createDataFrame(data, schema)
+        return {r["doc_id"]: r["wsample_key"]
+                for r in weighted_sample_keys(df, "n_chars", "doc_id").collect()}
+
+    got = spark_keys(rows)
+    assert got[3] is None
+    assert {k: got[k] for k in (1, 2)} == spark_keys(finite)
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, lang VARCHAR, n_chars DOUBLE)")
+    con.executemany("INSERT INTO documents VALUES (?, ?, ?)", rows)
+    oracle = {d: k for d, _, k, _ in con.execute(entry._weighted_sample_sql()).fetchall()}
+    assert oracle == got
+
+
 def test_weighted_sample_per_group_quota_and_determinism(spark):
     from kgspark.ops.sample import weighted_sample_per_group
 
