@@ -15,14 +15,16 @@ Stage 1 — per-bucket, checkpoint-resumable (the expensive scan):
   The pages are read once per build. On rerun, buckets with status='done'
   are filtered away before any extraction work happens (when every bucket
   is done the pages are not read at all); re-processing a bucket overwrites
-  exactly its own partition (idempotent).
+  exactly its own partition (idempotent). The bucket count is recorded
+  beside the lineage (``lineage/_BUCKETS``); a rerun with another count is
+  refused before any page is read, since its bucket ids name other pages.
 
 Stage 2 — global, cheap, idempotent (runs on the columnar triple store):
   surface-form canonicalization (X7 connected components, Disease names
   only, collected once) -> canonical triples (materialized once)
   -> nodes/edges canonicalization + dedup -> bucketed graph tables.
-  ``run_pipeline`` saves a manifest with the graph (the lineage state and
-  options it was built from) and skips this stage while it still matches.
+  ``run_pipeline`` saves a manifest with the graph (the lineage state it
+  was built from) and skips this stage while it still matches.
 
 At 10^12 documents stage 1 dominates; its unit of retry/skip is the bucket,
 so a failed cluster loses at most one bucket's work. Stage 2 is a full
@@ -36,6 +38,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
+from pathlib import Path
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -47,8 +50,8 @@ from kgspark.construct import graph as g
 from kgspark.extract import components, openie
 
 _SKETCH_K = 64  # per-bucket KMV url-sketch size (rse ~ 1/sqrt(k-2) ~ 13%)
-# the (bucket, run_seq) lineage state and graph options a saved graph was
-# built from; run_pipeline skips graph_stage while it still matches
+# the (bucket, run_seq, rows) lineage state a saved graph was built from;
+# run_pipeline skips graph_stage while it still matches
 _MANIFEST = "graph_manifest.json"
 
 _TRIPLE_COLS = ["subj", "subj_type", "pred", "obj", "obj_type"]
@@ -74,20 +77,13 @@ class PipelineResult:
 
 @dataclass
 class ExtractResult:
-    """What ``extract_stage`` did. Unpacks as ``(processed, skipped)``;
-    ``latest`` is the lineage after the stage: per bucket, the fields of its
-    latest row (by ``run_seq``) and ``rows``, its number of lineage rows."""
+    """What ``extract_stage`` did. ``latest`` is the lineage after the
+    stage: per bucket, the fields of its latest row (by ``run_seq``) and
+    ``rows``, its number of lineage rows."""
 
     processed: int
     skipped: int
     latest: dict[int, dict]
-
-    def __iter__(self):
-        return iter((self.processed, self.skipped))
-
-
-def _bucket_of(n_buckets: int):
-    return F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
 
 
 def _read_lineage(spark: SparkSession, lineage_path: str) -> dict[int, dict]:
@@ -119,18 +115,27 @@ def extract_stage(
     n_buckets: int = g._N_BUCKETS,
     run_id: str = "run-0",
     run_seq: int = 0,
-    resume: bool = True,
 ) -> ExtractResult:
-    """Stage 1. Unpacks as (buckets_processed, buckets_skipped)."""
+    """Stage 1: extract the buckets not yet done. Raises ``ValueError``,
+    before any Spark job, when the lineage was written with a bucket count
+    other than ``n_buckets``."""
     triples_path = f"{out_dir}/doc_triples"
     lineage_path = f"{out_dir}/lineage"
+    count_path = Path(lineage_path, "_BUCKETS")  # Spark's reader skips `_` files
 
+    written = int(count_path.read_text(encoding="utf-8")) if count_path.exists() else None
+    if written not in (None, n_buckets):
+        raise ValueError(f"{lineage_path} has {written} buckets; extracting with {n_buckets}")
     latest = _read_lineage(spark, lineage_path)
-    done = sorted(b for b, r in latest.items() if r["status"] == "done") if resume else []
+    done = sorted(b for b, r in latest.items() if r["status"] == "done")
     if set(range(n_buckets)) <= set(done):  # nothing left to extract
         return ExtractResult(0, len(done), latest)
 
-    pages = pages.withColumn("bucket", _bucket_of(n_buckets))
+    # recorded before the first write under this count
+    count_path.parent.mkdir(parents=True, exist_ok=True)
+    count_path.write_text(str(n_buckets), encoding="utf-8")
+    bucket = g._bucket(F.xxhash64("url"), n_buckets)
+    pages = pages.withColumn("bucket", bucket)
     if done:
         pages = pages.filter(~F.col("bucket").isin(done))
 
@@ -140,7 +145,7 @@ def extract_stage(
     cols = pages.select("url", "text", "html")
     extracted = (
         cols.mapInPandas(_extract_pages, schema=_EXTRACTED)
-        .withColumn("bucket", _bucket_of(n_buckets))
+        .withColumn("bucket", bucket)
         .cache()
     )
     try:
@@ -205,17 +210,8 @@ def graph_stage(
     spark: SparkSession,
     out_dir: str,
     n_buckets: int = g._N_BUCKETS,
-    canonicalize: bool = True,
-    min_support: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Stage 2: triple store -> canonicalized, deduplicated graph tables.
-
-    ``min_support``: keep only assertions whose (subj, pred, obj) was
-    extracted from at least this many documents — the provenance-count
-    noise gate (single-document extraction errors disappear; repeated
-    facts survive). Applied BEFORE canonicalization so spurious surface
-    forms don't seed alias components either.
-    """
+    """Stage 2: triple store -> canonicalized, deduplicated graph tables."""
     # the graph is about to change: only run_pipeline re-records what it
     # was built from, once the new graph is written
     if os.path.exists(f"{out_dir}/{_MANIFEST}"):
@@ -223,32 +219,19 @@ def graph_stage(
     triples = (
         spark.read.schema(schemas.DOC_TRIPLES).parquet(f"{out_dir}/doc_triples").drop("bucket")
     )
-    if min_support and min_support > 1:
-        key = _TRIPLE_COLS
-        # distinct docs, not assertion rows: one document repeating a triple
-        # must not satisfy the gate (it exists to kill single-document errors)
-        support = (
-            triples.select(*key, "url").distinct()
-            .groupBy(*key).agg(F.count("*").alias("n_sup"))
-            .where(F.col("n_sup") >= min_support).drop("n_sup")
-        )
-        triples = triples.join(support, key, "left_semi")
-    if canonicalize:
-        names = (
-            triples.select(F.col("subj_type").alias("label"), F.col("subj").alias("name"))
-            .union(triples.select(F.col("obj_type"), F.col("obj")))
-            .filter(F.col("label") == "Disease")
-            .distinct()
-        )
-        # Disease names only (dictionary-scale): computed once, then both
-        # joins read it from the driver
-        mapping = components.canonical_surface_forms(names).filter(
-            F.col("name") != F.col("canonical")
-        )
-        mapping = schemas.local_frame(
-            spark, [r.asDict() for r in mapping.collect()], mapping.schema
-        )
-        triples = components.apply_canonicalization(triples, mapping)
+    names = (
+        triples.select(F.col("subj_type").alias("label"), F.col("subj").alias("name"))
+        .union(triples.select(F.col("obj_type"), F.col("obj")))
+        .filter(F.col("label") == "Disease")
+        .distinct()
+    )
+    # Disease names only (dictionary-scale): computed once, then both joins
+    # read it from the driver
+    mapping = components.canonical_surface_forms(names).filter(
+        F.col("name") != F.col("canonical")
+    )
+    mapping = schemas.local_frame(spark, [r.asDict() for r in mapping.collect()], mapping.schema)
+    triples = components.apply_canonicalization(triples, mapping)
 
     # canonical triples, computed once for both the nodes and the edges write
     tr = triples.select(*_TRIPLE_COLS).localCheckpoint()
@@ -279,21 +262,13 @@ def run_pipeline(
     n_buckets: int = g._N_BUCKETS,
     run_id: str = "run-0",
     run_seq: int = 0,
-    resume: bool = True,
-    canonicalize: bool = True,
-    min_support: int | None = None,
 ) -> PipelineResult:
-    ex = extract_stage(spark, pages, out_dir, n_buckets, run_id, run_seq, resume)
+    ex = extract_stage(spark, pages, out_dir, n_buckets, run_id, run_seq)
     # the graph is current when nothing was extracted and the manifest saved
-    # with it names this lineage state and these options
-    manifest = {
-        "lineage": sorted([b, r["run_seq"], r["rows"]] for b, r in ex.latest.items()),
-        "n_buckets": n_buckets,
-        "canonicalize": canonicalize,
-        "min_support": min_support,
-    }
+    # with it names this lineage state
+    manifest = {"lineage": sorted([b, r["run_seq"], r["rows"]] for b, r in ex.latest.items())}
     if ex.processed or _read_manifest(out_dir) != manifest:
-        graph_stage(spark, out_dir, n_buckets, canonicalize, min_support)
+        graph_stage(spark, out_dir, n_buckets)
         _write_manifest(out_dir, manifest)
     return PipelineResult(
         n_docs=sum(r["n_docs"] for r in ex.latest.values()),
@@ -303,7 +278,7 @@ def run_pipeline(
     )
 
 
-def corpus_url_cardinality(spark: SparkSession, out_dir: str, k: int = _SKETCH_K) -> int:
+def corpus_url_cardinality(spark: SparkSession, out_dir: str) -> int:
     """Approximate distinct-url count of everything this pipeline has
     processed, answered FROM THE LINEAGE TABLE ALONE — no corpus or triple
     rescan. Latest lineage row per bucket (resume semantics) -> merge the
@@ -319,6 +294,6 @@ def corpus_url_cardinality(spark: SparkSession, out_dir: str, k: int = _SKETCH_K
         .where(F.col("sketch").isNotNull())
         .withColumn("all", F.lit(1))
     )
-    merged = kmv_merge(latest, ["all"], k=k)
-    rows = kmv_estimate(merged, k=k).collect()
+    merged = kmv_merge(latest, ["all"], k=_SKETCH_K)
+    rows = kmv_estimate(merged, k=_SKETCH_K).collect()
     return int(rows[0]["est_distinct"]) if rows else 0

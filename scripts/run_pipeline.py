@@ -3,13 +3,17 @@
 
     spark-submit --py-files kgspark.zip scripts/run_pipeline.py \
         --input /path/to/web_pages_parquet --out /path/to/kg \
-        [--buckets 32] [--run-id r1] [--run-seq 0] [--no-resume]
+        [--buckets 32] [--run-id r1] [--run-seq 0]
         [--warc]           # treat --input as a dir of WARC archives instead
         [--synthesize N]   # generate a deterministic corpus instead of reading
+        [--publish-dir D]  # also commit the graph as an atomic snapshot under D
+        [--cpus N]
 
 Reads an (url, warc_ts, html, text, lang) parquet corpus — or raw
 Common-Crawl WARC archives with --warc — runs the resumable extraction
-stage + graph stage, prints a one-line JSON summary.
+stage + graph stage, prints a one-line JSON summary. A rerun into the same
+--out resumes: finished buckets are skipped, and --buckets must match the
+count the lineage was written with.
 """
 
 from __future__ import annotations
@@ -34,8 +38,6 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=graph._N_BUCKETS)
     ap.add_argument("--run-id", default="run-0")
     ap.add_argument("--run-seq", type=int, default=0)
-    ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--no-canonicalize", action="store_true")
     ap.add_argument("--cpus", type=int, default=None)
     args = ap.parse_args()
     if not args.input and not args.synthesize:
@@ -61,8 +63,6 @@ def main() -> None:
         n_buckets=args.buckets,
         run_id=args.run_id,
         run_seq=args.run_seq,
-        resume=not args.no_resume,
-        canonicalize=not args.no_canonicalize,
     )
     nodes_df, edges_df = graph.read_graph(spark, args.out)
     nodes = nodes_df.count()

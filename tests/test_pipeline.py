@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from kgspark import fixtures, pipeline
+from kgspark import fixtures, pipeline, schemas
 
 
 def _counts(spark, out):
@@ -52,11 +52,9 @@ def test_pipeline_resume_skips_done_buckets(spark, tmp_path):
     pipeline.extract_stage(spark, partial, out_a, n_buckets=8, run_id="r1", run_seq=1)
 
     # resumed run over the full input: must skip the 4 finished buckets
-    processed, skipped = pipeline.extract_stage(
-        spark, pages, out_a, n_buckets=8, run_id="r2", run_seq=2, resume=True
-    )
-    assert skipped == 4
-    assert processed == 4
+    ex = pipeline.extract_stage(spark, pages, out_a, n_buckets=8, run_id="r2", run_seq=2)
+    assert ex.skipped == 4
+    assert ex.processed == 4
     pipeline.graph_stage(spark, out_a, n_buckets=8)
 
     res_b = pipeline.run_pipeline(spark, pages, out_b, n_buckets=8, run_id="clean")
@@ -218,7 +216,10 @@ def test_graph_rerun_leaves_no_stale_buckets(spark, tmp_path):
     out = str(tmp_path / "kg")
     pipeline.run_pipeline(spark, fixtures.web_pages_spark_small(spark, 60), out, n_buckets=4)
     assert _counts(spark, out)[1] > 0
-    _, edges = pipeline.graph_stage(spark, out, n_buckets=4, min_support=10**6)
+    schemas.local_frame(spark, [], schemas.DOC_TRIPLES).write.mode("overwrite").parquet(
+        f"{out}/doc_triples"
+    )
+    _, edges = pipeline.graph_stage(spark, out, n_buckets=4)
     assert edges.count() == 0
     for table, key in (("nodes", "entity_id"), ("edges", "src_id")):
         on_disk = spark.read.schema(f"{key} long").parquet(f"{out}/{table}")
@@ -400,58 +401,6 @@ def test_edges_with_provenance(spark):
     assert got["OTHER"] == (1, ["ux"])
 
 
-def test_min_support_noise_gate(spark, tmp_path):
-    """min_support=2 drops facts asserted by a single document while
-    keeping facts repeated across documents (fixture docs share their
-    hot-symptom sentences; each doc also has unique assertions)."""
-    from kgspark import fixtures
-    from kgspark.pipeline import run_pipeline
-
-    pages = fixtures.web_pages_df(spark, 300)
-    out_a, out_b = str(tmp_path / "all"), str(tmp_path / "gated")
-    res_all = run_pipeline(spark, pages, out_a, n_buckets=4)
-    res_gated = run_pipeline(spark, pages, out_b, n_buckets=4, min_support=2)
-    e_all = spark.read.parquet(f"{out_a}/edges").count()
-    e_gated = spark.read.parquet(f"{out_b}/edges").count()
-    assert 0 < e_gated < e_all
-
-
-def test_min_support_counts_distinct_docs_not_rows(spark, tmp_path):
-    """A single document repeating the same triple must NOT satisfy
-    min_support=2 (ADVICE r1: the gate counts distinct source docs, not
-    assertion rows); the same triple from two docs must."""
-    import pandas as pd
-
-    from kgspark.pipeline import graph_stage
-
-    rows = [
-        # one doc asserts (A, REL, B) twice -> support must be 1
-        {"url": "u1", "subj": "A", "subj_type": "Disease", "pred": "REL",
-         "obj": "B", "obj_type": "Disease", "bucket": 0},
-        {"url": "u1", "subj": "A", "subj_type": "Disease", "pred": "REL",
-         "obj": "B", "obj_type": "Disease", "bucket": 0},
-        # two docs assert (C, REL, D) once each -> support 2, survives
-        {"url": "u1", "subj": "C", "subj_type": "Disease", "pred": "REL",
-         "obj": "D", "obj_type": "Disease", "bucket": 0},
-        {"url": "u2", "subj": "C", "subj_type": "Disease", "pred": "REL",
-         "obj": "D", "obj_type": "Disease", "bucket": 1},
-    ]
-    out = str(tmp_path / "g")
-    spark.createDataFrame(pd.DataFrame(rows)).write.parquet(f"{out}/doc_triples")
-    _, edges = graph_stage(spark, out, n_buckets=4, canonicalize=False, min_support=2)
-    from kgspark.construct.graph import entity_id
-    from pyspark.sql import functions as F
-
-    kept = spark.read.parquet(f"{out}/edges")
-    names = spark.createDataFrame(
-        [("Disease", n) for n in "ABCD"], "label string, name string"
-    ).select("name", entity_id(F.col("label"), F.col("name")).alias("eid"))
-    ids = {r["name"]: r["eid"] for r in names.collect()}
-    got = {(r["src_id"], r["dst_id"]) for r in kept.collect()}
-    assert (ids["C"], ids["D"]) in got
-    assert (ids["A"], ids["B"]) not in got
-
-
 def _lineage_oracle(spark, pages, out, n_buckets):
     """The lineage columns as the earlier two-pass derivation computed them:
     doc stats and url sketches from the input pages, triple stats from the
@@ -554,8 +503,7 @@ def test_unreadable_lineage_fails_the_run(spark, tmp_path):
 
 def test_resume_skips_graph_stage_while_manifest_matches(spark, tmp_path, monkeypatch):
     """A rerun over finished lineage leaves the saved graph alone; new
-    extraction, other graph options or a graph rewritten outside
-    run_pipeline rebuild it."""
+    extraction or a graph rewritten outside run_pipeline rebuilds it."""
     import os
 
     pages = fixtures.web_pages_spark_small(spark, 120)
@@ -584,10 +532,41 @@ def test_resume_skips_graph_stage_while_manifest_matches(spark, tmp_path, monkey
     assert (again.n_buckets_processed, again.n_buckets_skipped) == (0, 4)
     assert (again.n_docs, again.n_triples) == (first.n_docs, first.n_triples)
 
-    pipeline.run_pipeline(spark, pages, out, n_buckets=4, canonicalize=False)
-    assert len(calls) == 1
-    pipeline.run_pipeline(spark, pages, out, n_buckets=4, canonicalize=False)
-    assert len(calls) == 1
     real_graph_stage(spark, out, n_buckets=4)  # the graph changed outside run_pipeline
-    pipeline.run_pipeline(spark, pages, out, n_buckets=4, canonicalize=False)
-    assert len(calls) == 2
+    pipeline.run_pipeline(spark, pages, out, n_buckets=4)
+    assert len(calls) == 1
+    pipeline.run_pipeline(spark, pages, out, n_buckets=4)  # its manifest is saved again
+    assert len(calls) == 1
+
+
+def test_rerun_with_other_bucket_count_raises(spark, tmp_path):
+    """The lineage records the bucket count it was written with: a rerun with
+    another count (whose bucket ids name other pages) is refused before any
+    Spark job, and the lineage and the triple store stay as they were."""
+    import os
+
+    pages = fixtures.web_pages_spark_small(spark, 240)
+    out = str(tmp_path / "kg")
+    first = pipeline.extract_stage(spark, pages.limit(93), out, n_buckets=8)
+    assert sum(r["n_docs"] for r in first.latest.values()) == 93
+
+    def files():
+        return {
+            os.path.join(root, n): os.stat(os.path.join(root, n)).st_mtime_ns
+            for t in ("lineage", "doc_triples")
+            for root, _, names in os.walk(f"{out}/{t}")
+            for n in names
+        }
+
+    before = files()
+    sc = spark.sparkContext
+    sc.setJobGroup("other-bucket-count", "rerun with another bucket count")
+    try:
+        with pytest.raises(ValueError, match="8 buckets; extracting with 4"):
+            pipeline.run_pipeline(spark, pages, out, n_buckets=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("other-bucket-count") == []
+    assert files() == before
+    triples = spark.read.schema(schemas.DOC_TRIPLES).parquet(f"{out}/doc_triples")
+    assert triples.select("url").distinct().count() == 93
